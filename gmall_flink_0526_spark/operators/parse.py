@@ -10,15 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 
-def parse_json(df: DataFrame, col: str, schema: T.StructType, out: str = "data") -> DataFrame:
-    """P2 — JSON string -> typed struct column (``from_json``).
-
-    Reference: ``JSON.parseObject(line, OrderInfo.class)`` at
-    RT/app/dwm/OrderWideApp.java:44-46.
-    """
-    return df.withColumn(out, F.from_json(F.col(col), schema))
-
-
 def parse_json_dead_letter(
     df: DataFrame, col: str, schema: T.StructType, out: str = "data"
 ) -> tuple[DataFrame, DataFrame]:
@@ -64,16 +55,6 @@ def derive_time_columns(df: DataFrame, ts: str, prefix: str = "create") -> DataF
         .withColumn(f"{prefix}_hour", F.date_format(c, "HH"))
         .withColumn(f"{prefix}_ts", F.unix_millis(c))
     )
-
-
-def project_columns(df: DataFrame, columns: list[str]) -> DataFrame:
-    """P4 — config-driven column projection.
-
-    Reference filters a JSONObject down to ``sinkColumns``
-    (RT/app/func/TableProcessFunction.java:165-184). Statically known
-    config -> a plain ``select`` (Catalyst prunes the scan to match).
-    """
-    return df.select(*columns)
 
 
 def project_map_columns(df: DataFrame, map_col: str, cols_col: str) -> DataFrame:

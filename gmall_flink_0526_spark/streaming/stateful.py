@@ -1,6 +1,6 @@
 """Custom stateful streaming operators via ``applyInPandasWithState``.
 
-These are the three operators whose semantics Spark's built-ins cannot
+These are the operators whose semantics Spark's built-ins cannot
 express exactly (SURVEY §2.4/§2.9): keyed ValueState with TTL and
 CEP-style timeout emission. Each mirrors a reference operator:
 
@@ -15,6 +15,7 @@ CEP-style timeout emission. Each mirrors a reference operator:
                              times out; a 1-event session is a bounce.
 - :func:`temporal_join` / :func:`temporal_enrich` — the Flink
                              temporal-table (as-of) join as keyed state.
+- :func:`transition_pairs` — consecutive-event pairs per key.
 - :func:`funnel_chain`     — multi-step CEP pattern state (the
                              flink-cep chain beyond the bounce job):
                              view->click->purchase last-touch links.
@@ -25,38 +26,141 @@ Replayed in timestamp order they converge exactly to the batch twins in
 ``operators/filters.py`` / ``plans/logs.py`` — tests/test_streaming.py
 asserts that.
 
-State scale: state lives per key in the state store (RocksDB/HDFS on a
-cluster), partitioned by ``groupBy(key)`` — the same hash partitioning
-as Flink's keyBy. TTLs bound state to ~#active keys.
+State layout: the state is logically one small value per key (the
+reference's keyed ValueState), but the state store is grouped by
+BUCKET, not by key. Each row goes to bucket ``pmod(xxhash64(key), B)``;
+one Python call per bucket per micro-batch sorts the bucket's rows by
+(key, time) and runs the per-key logic vectorized over the key
+segments. A bucket's state row holds its keys as the array ``ks`` plus
+one parallel array per per-key field. The ``applyInPandasWithState``
+wall is the per-group call (state fetch, Arrow round-trip, pandas fixed
+cost), not the rows, so a batch pays at most B calls instead of one per
+active key. B is decided once, by :func:`_bucket_count`: a few groups
+per state partition, derived from the session's parallelism and
+independent of key-space size, so state per bucket is O(keys / B). A
+key never straddles buckets (the bucket is a pure function of the key),
+so per-key order and carries are unaffected.
+
+Per-key TTL: a bucket has one processing-time timer, so the TTL
+operators (:func:`daily_dedup`, :func:`sessionize_bounce`) keep each
+key's last-update time and write the bucket back through
+:func:`_expire` on every call, with or without data: keys idle for at
+least the TTL are dropped (or emitted), and the timer is armed at the
+earliest remaining deadline. A busy key never extends an idle key's lifetime. TTLs bound
+state to ~#active keys; the other operators keep their state forever,
+as the reference's ValueStates without TTL do.
+
+The as-of operators re-enter each carried version as a synthetic row,
+but only for the stored keys present in the batch; the other stored
+keys are written back unchanged, so per-batch sort work follows the
+batch, not the key space.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 DAY_MS = 24 * 3600 * 1000
 
+_INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
-def _seed_safe_ids(pdf: pd.DataFrame, id_col: str) -> pd.DataFrame:
-    """Prepare a batch frame for concat with state-seed rows: the seed
-    frame has no id column, and plain ``pd.concat`` NaN-pads it —
-    silently widening an int64 id to float64, so an id >= 2^53 would
-    round through the float trip and be emitted corrupted. Cast the id
-    to pandas *nullable* Int64 first: the padding becomes NA and every
-    real batch row keeps its exact integer. Read back with
-    :func:`_exact_ids` at the output site."""
+
+def _bucket_count(spark: SparkSession) -> int:
+    """State bucket count: a few groups per state partition balances
+    the worker pool here and on a cluster. Independent of key-space
+    size, which keeps the group-call count bounded at any scale."""
+    return 4 * min(32, spark.sparkContext.defaultParallelism)
+
+
+def _by_bucket(
+    events: DataFrame,
+    key: str,
+    fn,
+    out_t,
+    state_fields: list[tuple[str, T.DataType]],
+    timeout: str,
+) -> DataFrame:
+    """Group ``events`` by the bucket of ``key`` and run ``fn`` per
+    bucket. The state row is ``ks`` (the bucket's keys, typed as the
+    input's key column) plus one array per ``(name, element type)`` in
+    ``state_fields``, parallel to ``ks``."""
+    state_t = T.StructType(
+        [T.StructField("ks", T.ArrayType(events.schema[key].dataType, False))]
+        + [T.StructField(n, T.ArrayType(t, True)) for n, t in state_fields]
+    )
+    buckets = _bucket_count(events.sparkSession)
+    return (
+        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
+        .groupBy("_bkt")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=out_t,
+            stateStructType=state_t,
+            outputMode="append",
+            timeoutConf=timeout,
+        )
+    )
+
+
+def _state_value(dtype: T.DataType, v):
+    """Coerce a pandas/numpy scalar to the DECLARED state type: a batch
+    with any NULL in an integral column arrives float64-upcast, and a
+    float written into a long state field is silently dropped by the
+    state serializer. NaN/NA -> None."""
+    if pd.isna(v):
+        return None
+    if isinstance(dtype, _INTEGRAL_T):
+        return int(v)
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        return float(v)
+    return v.item() if hasattr(v, "item") else v
+
+
+def _expire(state: GroupState, stored: dict, now: int, ttl: int) -> list:
+    """Per-key TTL inside one bucket. ``stored`` maps each key to its
+    per-key fields, the last of which is its last update (processing-
+    time ms). Keys with ``now - um >= ttl`` leave; the rest are written
+    back as the bucket's parallel arrays, and the bucket timer is armed
+    at their earliest deadline ``min(um) + ttl - now`` — so a busy key
+    never extends an idle key's lifetime, and a kept key is not granted
+    a fresh TTL. Returns the expired ``(key, fields)`` pairs."""
+    live = {k: v for k, v in stored.items() if now - v[-1] < ttl}
+    if live:
+        state.update((list(live), *map(list, zip(*live.values()))))
+        state.setTimeoutDuration(min(v[-1] for v in live.values()) + ttl - now)
+    else:
+        state.remove()
+    return [(k, v) for k, v in stored.items() if k not in live]
+
+
+def _with_seeds(pdf: pd.DataFrame, seed: pd.DataFrame, id_col: str) -> pd.DataFrame:
+    """Prepend synthetic state rows ``seed`` to the batch rows.
+
+    Seed columns take the batch dtype where they can; a None read back
+    from state cannot cast into a non-nullable numpy dtype (int64 /
+    bool), so such a column is left for concat to upcast — the carry is
+    positional, and the output serialization handles the upcast. The
+    seed has no id column, and plain ``pd.concat`` NaN-pads it, which
+    would widen an int64 id to float64 and corrupt ids >= 2^53: the id
+    is cast to nullable Int64 first (read back with :func:`_exact_ids`)."""
+    for c in seed.columns:
+        try:
+            seed[c] = seed[c].astype(pdf[c].dtype)
+        except (TypeError, ValueError):
+            pass
     if pd.api.types.is_integer_dtype(pdf[id_col].dtype):
-        return pdf.assign(**{id_col: pdf[id_col].astype("Int64")})
-    return pdf
+        pdf = pdf.assign(**{id_col: pdf[id_col].astype("Int64")})
+    return pd.concat([seed, pdf], ignore_index=True)
 
 
 def _exact_ids(ids: pd.Series):
-    """Output-side twin of :func:`_seed_safe_ids`: probe/output rows
+    """Output-side twin of :func:`_with_seeds`: probe/output rows
     are always real batch rows (seeds carry build/stage types only),
     so the nullable Int64 column never holds NA where it is read —
     cast back to exact int64 for Arrow serialization."""
@@ -65,134 +169,62 @@ def _exact_ids(ids: pd.Series):
     return ids.to_numpy()
 
 
+def _batch(pdfs: Iterable[pd.DataFrame]) -> pd.DataFrame | None:
+    frames = [p for p in pdfs if len(p)]
+    return pd.concat(frames) if frames else None
+
+
 def daily_dedup(
     events: DataFrame,
     key: str = "user_id",
     ts: str = "ts",
     id_col: str = "event_id",
-    buckets: int | None = None,
 ) -> DataFrame:
     """First visit per key per calendar day (UV dedup), exact keyed-state
-    form. Output: (user_id, dt, first_event_id)."""
-    if buckets:
-        return _daily_dedup_bucketed(events, key, ts, id_col, buckets)
+    form. Output: (user_id, dt, first_event_id).
+
+    State per key: the last seen day and its update time. Sorted by
+    time, a key's days are non-decreasing, so "first row of each new
+    (key, day)" is ``~duplicated``, minus the key's stored day. The
+    reference's 1-day StateTtlConfig is applied per key
+    (:func:`_expire`)."""
+    key_dt = events.schema[key].dataType
 
     def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            # TTL expiry == the reference's 1-day StateTtlConfig
-            state.remove()
-            return
-        (last_date,) = state.get if state.exists else (None,)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        # vectorized over the whole group (no per-row Python): sorted
-        # by time, days are non-decreasing, so "first row of each new
-        # day" == ~duplicated, minus the state's already-seen day.
-        pdf = pd.concat(frames).sort_values([ts, id_col])
-        d = pdf[ts].dt.strftime("%Y-%m-%d")
-        keep = ~d.duplicated()
-        if last_date is not None:
-            keep &= d != last_date
-        state.update((d.iloc[-1],))
-        state.setTimeoutDuration(DAY_MS)
-        out = pdf.loc[keep]
-        if len(out):
-            yield pd.DataFrame(
-                {
-                    key: key_tuple[0],
-                    "dt": d.loc[keep].to_numpy(),
-                    "first_event_id": out[id_col].to_numpy(),
-                    "ts": out[ts].to_numpy(),
-                }
-            )
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key} long, dt string, first_event_id long, ts timestamp",
-        stateStructType="last_date string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def _daily_dedup_bucketed(
-    events: DataFrame, key: str, ts: str, id_col: str, buckets: int
-) -> DataFrame:
-    """Bucketed form of :func:`daily_dedup` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick). State
-    per bucket: parallel (keys, last_date, last-update processing-time
-    ms) arrays. The per-key 1-day TTL is preserved at key granularity:
-    the bucket re-arms a 1-day processing-time timeout on every update,
-    and when it fires, only keys idle >= 1 day are dropped (the rest
-    re-arm) — so a hot key in the same bucket never extends a cold
-    key's state lifetime. Per-key dedup logic is the vectorized
-    original run per key segment; output rows are identical."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
         now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            # evict only the keys whose OWN ttl lapsed; keep the rest
-            if st is not None:
-                keep = [
-                    (k, d, u)
-                    for k, d, u in zip(st[0], st[1], st[2])
-                    if now - u < DAY_MS
-                ]
-                if keep:
-                    ks, ds, us = zip(*keep)
-                    state.update((list(ks), list(ds), list(us)))
-                    state.setTimeoutDuration(DAY_MS)
-                    return
-            state.remove()
-            return
-        stored = dict(zip(st[0], st[1])) if st is not None else {}
-        upd_ms = dict(zip(st[0], st[2])) if st is not None else {}
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([key, ts, id_col])
-        d = pdf[ts].dt.strftime("%Y-%m-%d")
-        karr = pdf[key]
-        # first row of each (key, day) pair, minus the key's stored day
-        keep = ~pd.DataFrame({"k": karr, "d": d}).duplicated().to_numpy()
-        if stored:
-            keep &= (d != karr.map(stored)).to_numpy()
-        # state: last (max) day per key this batch replaces the stored
-        # day; untouched stored keys persist with their old stamps
-        last_rows = ~karr.duplicated(keep="last")
-        for k, dv in zip(karr[last_rows], d[last_rows]):
-            k = int(k) if hasattr(k, "item") else k
-            stored[k] = dv
-            upd_ms[k] = now
-        state.update((list(stored.keys()), [stored[k] for k in stored], [upd_ms[k] for k in stored]))
-        state.setTimeoutDuration(DAY_MS)
-        out = pdf.loc[keep]
-        if len(out):
-            yield pd.DataFrame(
+        st = state.get if state.exists else ([], [], [])
+        stored = {k: [d, u] for k, d, u in zip(*st)}
+        pdf = _batch(pdfs)
+        out = None
+        if pdf is not None:
+            pdf = pdf.sort_values([key, ts, id_col])
+            d = pdf[ts].dt.strftime("%Y-%m-%d")
+            karr = pdf[key]
+            keep = ~pd.DataFrame({"k": karr, "d": d}).duplicated().to_numpy()
+            if stored:
+                keep &= (d != karr.map({k: v[0] for k, v in stored.items()})).to_numpy()
+            # the key's last (max) day this batch replaces its stored day
+            last_rows = ~karr.duplicated(keep="last")
+            for k, dv in zip(karr[last_rows], d[last_rows]):
+                stored[_state_value(key_dt, k)] = [dv, now]
+            first = pdf.loc[keep]
+            out = pd.DataFrame(
                 {
-                    key: out[key].to_numpy(),
+                    key: first[key].to_numpy(),
                     "dt": d.loc[keep].to_numpy(),
-                    "first_event_id": out[id_col].to_numpy(),
-                    "ts": out[ts].to_numpy(),
+                    "first_event_id": first[id_col].to_numpy(),
+                    "ts": first[ts].to_numpy(),
                 }
             )
+        _expire(state, stored, now, DAY_MS)
+        if out is not None and len(out):
+            yield out
 
-    key_t = {f.name: f.dataType.simpleString() for f in events.schema.fields}[key]
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=f"{key} long, dt string, first_event_id long, ts timestamp",
-            stateStructType=f"ks array<{key_t}>, ld array<string>, um array<long>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    return _by_bucket(
+        events, key, fn,
+        f"{key} long, dt string, first_event_id long, ts timestamp",
+        [("ld", T.StringType()), ("um", T.LongType())],
+        GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
@@ -201,80 +233,30 @@ def fix_is_new(
     key: str = "user_id",
     ts: str = "ts",
     id_col: str = "event_id",
-    buckets: int | None = None,
 ) -> DataFrame:
     """is_new flag correction: '1' only on the key's first-seen day.
-    Output: (event_id, user_id, is_new)."""
-    if buckets:
-        return _fix_is_new_bucketed(events, key, ts, id_col, buckets)
+    Output: (event_id, user_id, is_new).
+
+    The key's first-seen day is its stored day if set, else the day of
+    its first batch row (rows sorted by key, ts, id)."""
+    key_dt = events.schema[key].dataType
 
     def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
+        stored = dict(zip(*state.get)) if state.exists else {}
+        pdf = _batch(pdfs)
+        if pdf is None:
             return
-        (first_date,) = state.get if state.exists else (None,)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([ts, id_col])
-        d = pdf[ts].dt.strftime("%Y-%m-%d")
-        if first_date is None:
-            first_date = d.iloc[0]
-        state.update((first_date,))
-        yield pd.DataFrame(
-            {
-                id_col: pdf[id_col].to_numpy(),
-                key: key_tuple[0],
-                "is_new": (d == first_date).map({True: "1", False: "0"}).to_numpy(),
-            }
-        )
-
-    # NoTimeout: the reference keeps this ValueState forever (BaseLogApp
-    # declares no TTL, unlike UniqueVisitApp) — first-seen must persist.
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=f"{id_col} long, {key} long, is_new string",
-        stateStructType="first_date string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _fix_is_new_bucketed(
-    events: DataFrame, key: str, ts: str, id_col: str, buckets: int
-) -> DataFrame:
-    """Bucketed form of :func:`fix_is_new` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick): state
-    per bucket is the parallel (keys, first_date) arrays; the per-key
-    first-seen resolves as stored-date-if-present else the key's first
-    batch day (rows sorted by key, ts, id), all vectorized via a map
-    + segmented head. State retains stored keys untouched by the
-    batch. Output rows identical to the per-key form."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        stored = dict(zip(st[0], st[1])) if st is not None else {}
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([key, ts, id_col])
+        pdf = pdf.sort_values([key, ts, id_col])
         d = pdf[ts].dt.strftime("%Y-%m-%d")
         karr = pdf[key]
-        # the key's first batch day = d at each key segment's head,
-        # broadcast down the segment; stored first-seen wins where set
+        # the key's first batch day, broadcast down its segment; the
+        # stored first-seen day wins where set
         batch_first = d.groupby(karr.to_numpy()).transform("first")
         first = karr.map(stored).fillna(batch_first) if stored else batch_first
-        # state = stored keys (unchanged) + this batch's new keys
-        new_keys = karr[~karr.duplicated()]
-        upd = dict(stored)
-        fd_head = first[~karr.duplicated()]
-        for k, fd in zip(new_keys, fd_head):
-            if k not in upd:
-                upd[int(k) if hasattr(k, "item") else k] = fd
-        state.update((list(upd.keys()), list(upd.values())))
+        head = ~karr.duplicated()
+        for k, fd in zip(karr[head], first[head]):
+            stored.setdefault(_state_value(key_dt, k), fd)
+        state.update((list(stored), list(stored.values())))
         yield pd.DataFrame(
             {
                 id_col: pdf[id_col].to_numpy(),
@@ -283,17 +265,13 @@ def _fix_is_new_bucketed(
             }
         )
 
-    key_t = {f.name: f.dataType.simpleString() for f in events.schema.fields}[key]
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=f"{id_col} long, {key} long, is_new string",
-            stateStructType=f"ks array<{key_t}>, fd array<string>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # NoTimeout: the reference keeps this ValueState forever (BaseLogApp
+    # declares no TTL, unlike UniqueVisitApp) — first-seen must persist.
+    return _by_bucket(
+        events, key, fn,
+        f"{id_col} long, {key} long, is_new string",
+        [("fd", T.StringType())],
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -303,197 +281,85 @@ def sessionize_bounce(
     key: str = "user_id",
     ts: str = "ts",
     id_col: str = "event_id",
-    buckets: int | None = None,
 ) -> DataFrame:
     """CEP bounce detection: a session closes when the next event
     arrives after the gap, or when state times out (the CEP ``within``
     timeout branch). Emits one row per *closed* session:
     (user_id, n_events, is_bounce, end_ts = last event of the session).
     Open sessions stay in state.
+
+    State per key: the open session's last event time, event count and
+    update time. Sessionization runs segmented per key: a per-key shift
+    for the gap test, and session ids from a global entry cumsum made
+    key-local by pairing with the key. A carried open session continues
+    into the key's first batch session or closes at its own end. The
+    ``within`` timeout is per key (:func:`_expire`): a key idle for the
+    gap emits its open session and leaves state.
     """
-    if buckets:
-        return _sessionize_bounce_bucketed(
-            events, gap_minutes, key, ts, id_col, buckets
-        )
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            if state.exists:
-                last_us, n = state.get
-                yield pd.DataFrame(
-                    [(key_tuple[0], n, n == 1, pd.Timestamp(last_us * 1000))],
-                    columns=[key, "n_events", "is_bounce", "end_ts"],
-                )
-            state.remove()
-            return
-        last_us, n = state.get if state.exists else (None, 0)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        # vectorized sessionization with state carry-in: entry flags
-        # from time gaps, cumsum -> session ids, per-session (count,
-        # last ts); every session but the batch's last is closed.
-        pdf = pd.concat(frames).sort_values([ts, id_col])
-        t_us = pdf[ts].astype("int64") // 1000  # pandas ns -> us
-        prev = t_us.shift(1)
-        if last_us is not None:
-            prev.iloc[0] = last_us
-        entry = prev.isna() | ((t_us - prev) > gap_us)
-        sid = entry.cumsum()
-        agg = t_us.groupby(sid.to_numpy()).agg(["count", "max"])
-        closed = []
-        if last_us is not None:
-            if entry.iloc[0]:
-                # the carried-over open session closes at its own end
-                closed.append((key_tuple[0], n, n == 1, pd.Timestamp(last_us * 1000)))
-            else:
-                # first rows continue the open session
-                agg.iloc[0, agg.columns.get_loc("count")] += n
-        for cnt, end in agg.iloc[:-1].itertuples(index=False):
-            closed.append((key_tuple[0], int(cnt), cnt == 1, pd.Timestamp(int(end) * 1000)))
-        state.update((int(t_us.iloc[-1]), int(agg["count"].iloc[-1])))
-        state.setTimeoutDuration(gap_minutes * 60 * 1000)
-        if closed:
-            yield pd.DataFrame(closed, columns=[key, "n_events", "is_bounce", "end_ts"])
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key} long, n_events long, is_bounce boolean, end_ts timestamp",
-        stateStructType="last_us long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def _sessionize_bounce_bucketed(
-    events: DataFrame,
-    gap_minutes: int,
-    key: str,
-    ts: str,
-    id_col: str,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`sessionize_bounce` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick). State
-    per bucket: parallel (keys, last_us, n, last-update ms) arrays.
-    Sessionization runs segmented per key (groupby shift for the gap
-    test, global entry-cumsum session ids made key-local by pairing
-    with the key); carried open sessions continue or close exactly as
-    the single-key form decides per key. The CEP ``within`` timeout
-    stays per-KEY: on a bucket timeout only keys idle >= gap emit
-    their open session and leave; the rest re-arm."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
+    key_dt = events.schema[key].dataType
     gap_us = gap_minutes * 60 * 1_000_000
     gap_ms = gap_minutes * 60 * 1000
 
     def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
         now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            if st is not None:
-                expired, kept = [], []
-                for k, lu, n, um in zip(st[0], st[1], st[2], st[3]):
-                    (expired if now - um >= gap_ms else kept).append((k, lu, n, um))
-                if expired:
-                    yield pd.DataFrame(
-                        [
-                            (k, n, n == 1, pd.Timestamp(lu * 1000))
-                            for k, lu, n, um in expired
-                        ],
-                        columns=[key, "n_events", "is_bounce", "end_ts"],
-                    )
-                if kept:
-                    ks, lus, ns, ums = zip(*kept)
-                    state.update((list(ks), list(lus), list(ns), list(ums)))
-                    state.setTimeoutDuration(gap_ms)
-                    return
-            state.remove()
-            return
-        last_map = dict(zip(st[0], st[1])) if st is not None else {}
-        n_map = dict(zip(st[0], st[2])) if st is not None else {}
-        upd_ms = dict(zip(st[0], st[3])) if st is not None else {}
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([key, ts, id_col])
-        karr = pdf[key]
-        t_us = pdf[ts].astype("int64") // 1000
-        prev = t_us.groupby(karr.to_numpy()).shift(1)
-        head = ~karr.duplicated()
-        if last_map:
-            prev = prev.where(~head, karr.map(last_map))
-        entry = prev.isna() | ((t_us - prev) > gap_us)
-        # (key, global entry-cumsum) is unique per session AND ordered;
-        # a key-head continuation row reuses the previous key's final
-        # sid, which the key pairing keeps distinct
-        sid = entry.cumsum()
-        sess = (
-            pd.DataFrame({"k": karr.to_numpy(), "s": sid.to_numpy(), "t": t_us.to_numpy()})
-            .groupby(["k", "s"], sort=False)
-            .agg(cnt=("t", "size"), end=("t", "max"))
-            .reset_index()
-        )
-        first_of_key = ~sess["k"].duplicated()
-        last_of_key = ~sess["k"].duplicated(keep="last")
-        closed_rows = []
-        if last_map:
-            in_state = karr.isin(last_map.keys())
-            cont_keys = set(karr[head & ~entry & in_state])
-            open_close_keys = karr[head & entry & in_state]
-            # carried open session continues into the key's first batch
-            # session...
-            if cont_keys:
-                add = (
-                    sess["k"].map(lambda k: n_map.get(k, 0) if k in cont_keys else 0)
-                ).where(first_of_key, 0)
-                sess["cnt"] = sess["cnt"] + add
-            # ...or closes at its own end when the first batch row
-            # opens a new session
-            for k in open_close_keys:
-                k = int(k) if hasattr(k, "item") else k
-                n = n_map[k]
-                closed_rows.append((k, n, n == 1, pd.Timestamp(last_map[k] * 1000)))
-        # every batch session but each key's last is closed
-        done = sess.loc[~last_of_key]
-        closed_rows.extend(
-            (k, int(c), c == 1, pd.Timestamp(int(e) * 1000))
-            for k, c, e in zip(done["k"], done["cnt"], done["end"])
-        )
-        tail = sess.loc[last_of_key]
-        for k, c, e in zip(tail["k"], tail["cnt"], tail["end"]):
-            k = int(k) if hasattr(k, "item") else k
-            last_map[k] = int(e)
-            n_map[k] = int(c)
-            upd_ms[k] = now
-        state.update(
-            (
-                list(last_map.keys()),
-                [last_map[k] for k in last_map],
-                [n_map[k] for k in last_map],
-                [upd_ms[k] for k in last_map],
+        st = state.get if state.exists else ([], [], [], [])
+        stored = {k: [lu, n, um] for k, lu, n, um in zip(*st)}
+        closed = []
+        pdf = _batch(pdfs)
+        if pdf is not None:
+            pdf = pdf.sort_values([key, ts, id_col])
+            karr = pdf[key]
+            t_us = pdf[ts].astype("int64") // 1000  # pandas ns -> us
+            prev = t_us.groupby(karr.to_numpy()).shift(1)
+            head = ~karr.duplicated()
+            if stored:
+                prev = prev.where(~head, karr.map({k: v[0] for k, v in stored.items()}))
+            entry = prev.isna() | ((t_us - prev) > gap_us)
+            # (key, global entry-cumsum) is unique per session AND
+            # ordered; a key-head continuation row reuses the previous
+            # key's final sid, which the key pairing keeps distinct
+            sid = entry.cumsum()
+            sess = (
+                pd.DataFrame({"k": karr.to_numpy(), "s": sid.to_numpy(), "t": t_us.to_numpy()})
+                .groupby(["k", "s"], sort=False)
+                .agg(cnt=("t", "size"), end=("t", "max"))
+                .reset_index()
             )
-        )
-        state.setTimeoutDuration(gap_ms)
-        if closed_rows:
-            yield pd.DataFrame(
-                closed_rows, columns=[key, "n_events", "is_bounce", "end_ts"]
+            first_of_key = ~sess["k"].duplicated()
+            last_of_key = ~sess["k"].duplicated(keep="last")
+            if stored:
+                in_state = karr.isin(stored.keys())
+                # a carried open session continues into the key's first
+                # batch session...
+                cont = set(karr[head & ~entry & in_state])
+                if cont:
+                    add = sess["k"].map(lambda k: stored[k][1] if k in cont else 0)
+                    sess["cnt"] = sess["cnt"] + add.where(first_of_key, 0)
+                # ...or closes at its own end when the key's first batch
+                # row opens a new session
+                for k in karr[head & entry & in_state]:
+                    lu, n, _ = stored[k]
+                    closed.append((_state_value(key_dt, k), n, n == 1, lu))
+            # every batch session but each key's last is closed
+            done = sess.loc[~last_of_key]
+            closed.extend(
+                (k, int(c), c == 1, int(e))
+                for k, c, e in zip(done["k"], done["cnt"], done["end"])
             )
+            tail = sess.loc[last_of_key]
+            for k, c, e in zip(tail["k"], tail["cnt"], tail["end"]):
+                stored[_state_value(key_dt, k)] = [int(e), int(c), now]
+        closed += [(k, n, n == 1, lu) for k, (lu, n, _) in _expire(state, stored, now, gap_ms)]
+        if closed:
+            out = pd.DataFrame(closed, columns=[key, "n_events", "is_bounce", "end_us"])
+            out["end_ts"] = pd.to_datetime(out.pop("end_us"), unit="us")
+            yield out
 
-    key_t = {f.name: f.dataType.simpleString() for f in events.schema.fields}[key]
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=f"{key} long, n_events long, is_bounce boolean, end_ts timestamp",
-            stateStructType=f"ks array<{key_t}>, lu array<long>, n array<long>, um array<long>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    return _by_bucket(
+        events, key, fn,
+        f"{key} long, n_events long, is_bounce boolean, end_ts timestamp",
+        [("lu", T.LongType()), ("n", T.LongType()), ("um", T.LongType())],
+        GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
@@ -506,7 +372,6 @@ def temporal_enrich(
     build_type: str = "dimchange",
     probe_type: str = "order",
     val_cols: tuple = ("value",),
-    buckets: int | None = None,
 ) -> DataFrame:
     """Multi-value stream-stream backward as-of enrichment — the
     streaming face of point-in-time dimension lookup (the Flink
@@ -539,222 +404,57 @@ def temporal_enrich(
     columns with magnitude > 2^53 lose precision when carried PAST a
     tombstone in the same batch — surrogate keys and counters are fine;
     carry 64-bit hashes as strings or split words if exactness matters.
+
+    Per bucket, the batch sorts by (key, ts, build-before-probe) and
+    the positional carry runs as a segmented ffill per key.
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
     val_cols = list(val_cols)
     clash = set(val_cols) & {id_col, key, "probe_ts", "build_ts"}
     if clash:
         raise ValueError(f"temporal_enrich: value columns collide: {sorted(clash)}")
-    if buckets:
-        return _temporal_enrich_bucketed(
-            events, key, ts, id_col, type_col, build_type, probe_type,
-            val_cols, buckets,
-        )
-    _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
-        pdf = pdf[pdf[type_col].isin([build_type, probe_type])]
-        if not len(pdf):
-            return
-        if st is not None:
-            seed = pd.DataFrame(
-                [
-                    {
-                        ts: pd.Timestamp(st[0], unit="us"),
-                        type_col: build_type,
-                        **{c: st[1 + i] for i, c in enumerate(val_cols)},
-                    }
-                ]
-            )
-            for c in (ts, *val_cols):
-                # a None tombstone value cannot cast into a
-                # non-nullable numpy dtype (int64/bool): leave it and
-                # let concat upcast the column; the carry is
-                # positional, so the dtype only matters for output
-                # serialization, which .where() handles below
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
-        is_b = pdf[type_col] == build_type
-        # sort by (ts, build-before-probe) ONLY: equal-(key, ts) builds
-        # are out of contract (pre-aggregate upstream), so value
-        # columns never need to tie-break — and must not, since a
-        # tombstone's None does not compare against a typed value
-        pdf = (
-            pdf.assign(_side=(~is_b).astype(int))
-            .sort_values([ts, "_side"], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        is_b = (pdf[type_col] == build_type).to_numpy()
-        # positional carry: each row sees the INDEX of the latest build
-        # at or before it — NULL build values ride along faithfully
-        bpos = pd.Series(np.where(is_b, np.arange(len(pdf)), np.nan)).ffill()
-        if is_b.any():
-            lb = pdf.iloc[int(bpos.iloc[-1])]
-            vals = []
-            for c in val_cols:
-                v = lb[c]
-                if pd.isna(v):
-                    vals.append(None)
-                # coerce to the DECLARED state type: a nullable batch
-                # arrives float64-upcast, and a float written into a
-                # long state field is silently dropped by the state
-                # serializer (the r10 review's int-tombstone finding)
-                elif isinstance(field[c], _INTEGRAL_T):
-                    vals.append(int(v))
-                elif isinstance(field[c], (T.DoubleType, T.FloatType)):
-                    vals.append(float(v))
-                else:
-                    vals.append(v.item() if hasattr(v, "item") else v)
-            state.update((int(lb[ts].value // 1000), *vals))
-        probes = ~is_b
-        if not probes.any():
-            return
-        pp = bpos[probes]
-        matched = pp.notna().to_numpy()
-        idx = pp.fillna(0).astype(int).to_numpy()
-        out = {
-            id_col: _exact_ids(pdf.loc[probes, id_col]),
-            key: key_tuple[0],
-            "probe_ts": pdf.loc[probes, ts].to_numpy(),
-        }
-        m = pd.Series(matched)
-        # .where (not masked assignment): upcasts an int64 carry to
-        # float64-with-NaN instead of raising on None — Arrow maps the
-        # integral floats back to the declared long output type
-        out["build_ts"] = pdf[ts].iloc[idx].reset_index(drop=True).where(m).to_numpy()
-        for c in val_cols:
-            out[c] = pdf[c].iloc[idx].reset_index(drop=True).where(m).to_numpy()
-        yield pd.DataFrame(out)
-
-    field = {
-        c: events.schema[c].dataType for c in (key, ts, id_col, *val_cols)
-    }
-    out_t = T.StructType(
-        [
-            T.StructField(id_col, field[id_col]),
-            T.StructField(key, field[key]),
-            T.StructField("probe_ts", field[ts]),
-            T.StructField("build_ts", field[ts]),
-            *[T.StructField(c, field[c]) for c in val_cols],
-        ]
-    )
-    state_t = T.StructType(
-        [T.StructField("bts", T.LongType())]
-        + [T.StructField(f"bv{i}", field[c]) for i, c in enumerate(val_cols)]
-    )
-    # NoTimeout: the latest dim version must persist for the stream's
-    # lifetime (fix_is_new's unbounded ValueState class)
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_t,
-        stateStructType=state_t,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _temporal_enrich_bucketed(
-    events: DataFrame,
-    key: str,
-    ts: str,
-    id_col: str,
-    type_col: str,
-    build_type: str,
-    probe_type: str,
-    val_cols: list,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`temporal_enrich`: the stateful operator
-    groups by ``pmod(xxhash64(key), buckets)`` instead of the raw key,
-    so each micro-batch pays ``buckets`` Python group calls instead of
-    one per ACTIVE KEY — the applyInPandasWithState wall is the
-    per-group call (state fetch + Arrow round-trip + pandas fixed
-    cost), not the rows. State per bucket holds the SAME one-version-
-    per-key payload as parallel arrays (keys, build ts, one array per
-    value column); each call re-seeds every stored key as a synthetic
-    build row (exactly the single-key carry rule), sorts the bucket by
-    (key, ts, build-before-probe) and runs the positional carry as a
-    SEGMENTED ffill per key — all vectorized, no per-key Python loop.
-    Row-level semantics are identical to the per-key form (pinned by
-    tests against it and by the shared oracle); only the state-store
-    key granularity changes. Keys cannot straddle buckets (the bucket
-    is a pure function of the key), so per-key ordering and carry are
-    unaffected.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     field = {c: events.schema[c].dataType for c in (key, ts, id_col, *val_cols)}
 
-    def _st_val(c, v):
-        # coerce to the DECLARED state element type (the r10
-        # int-tombstone rule): floats written into long array slots
-        # are silently dropped by the state serializer
-        if pd.isna(v):
-            return None
-        if isinstance(field[c], _INTEGRAL_T):
-            return int(v)
-        if isinstance(field[c], (T.DoubleType, T.FloatType)):
-            return float(v)
-        return v.item() if hasattr(v, "item") else v
-
     def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
+        ks, bts, *vals = (
+            [list(a) for a in state.get] if state.exists
+            else [[] for _ in range(2 + len(val_cols))]
+        )
+        pdf = _batch(pdfs)
+        if pdf is None:
             return
-        pdf = pd.concat(frames)
         pdf = pdf[pdf[type_col].isin([build_type, probe_type])]
         if not len(pdf):
             return
-        if st is not None and len(st[0]):
-            # one synthetic build row per stored key — the carried
-            # versions re-enter the sort exactly like the single-key
-            # form's seed
+        present = set(pdf[key].unique().tolist())
+        seeded = [i for i, k in enumerate(ks) if k in present]
+        if seeded:
             seed = pd.DataFrame(
                 {
-                    key: list(st[0]),
-                    ts: pd.to_datetime(pd.Series(list(st[1]), dtype="int64"), unit="us"),
+                    key: [ks[i] for i in seeded],
+                    ts: pd.to_datetime(
+                        pd.Series([bts[i] for i in seeded], dtype="int64"), unit="us"
+                    ),
                     type_col: build_type,
                     **{
-                        c: pd.Series(list(st[2 + i]), dtype="object")
-                        for i, c in enumerate(val_cols)
+                        c: pd.Series([vals[j][i] for i in seeded], dtype="object")
+                        for j, c in enumerate(val_cols)
                     },
                 }
             )
-            for c in (key, ts, *val_cols):
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
+            pdf = _with_seeds(pdf, seed, id_col)
         is_b = pdf[type_col] == build_type
-        # (key, ts, build-before-probe): the single-key sort applied
-        # per key segment; mergesort keeps the seed-first tie order
+        # sort by (key, ts, build-before-probe) ONLY: equal-(key, ts)
+        # builds are out of contract, so value columns never need to
+        # tie-break — and must not, since a tombstone's None does not
+        # compare against a typed value; mergesort keeps seeds first
         pdf = (
             pdf.assign(_side=(~is_b).astype(int))
             .sort_values([key, ts, "_side"], kind="mergesort")
             .reset_index(drop=True)
         )
         is_b = (pdf[type_col] == build_type).to_numpy()
-        # positional carry SEGMENTED by key: each row sees the index of
-        # the latest build at or before it within its own key
+        # positional carry: each row sees the INDEX of its key's latest
+        # build at or before it — NULL build values ride along faithfully
         bpos = (
             pd.Series(np.where(is_b, np.arange(len(pdf)), np.nan))
             .groupby(pdf[key].to_numpy())
@@ -762,14 +462,22 @@ def _temporal_enrich_bucketed(
         )
         builds = pdf.loc[is_b]
         if len(builds):
-            # last build per key (max ts — rows are key/ts sorted);
-            # every stored key seeded a build row, so no key's carried
-            # version can be dropped by the rewrite
-            lastb = builds.groupby(key, sort=True).tail(1)
-            new_keys = [_st_val(key, v) for v in lastb[key]]
-            bts_list = [int(v) for v in lastb[ts].astype("int64") // 1000]
-            vals_lists = [[_st_val(c, v) for v in lastb[c]] for c in val_cols]
-            state.update((new_keys, bts_list, *vals_lists))
+            # each key's last build (rows are key/ts sorted) replaces
+            # its stored version; keys absent from the batch keep theirs
+            lastb = builds.groupby(key, sort=False).tail(1)
+            new_ks = [_state_value(field[key], k) for k in lastb[key]]
+            fresh = set(new_ks)
+            kept = [i for i, k in enumerate(ks) if k not in fresh]
+            state.update(
+                (
+                    [ks[i] for i in kept] + new_ks,
+                    [bts[i] for i in kept] + (lastb[ts].astype("int64") // 1000).tolist(),
+                    *(
+                        [a[i] for i in kept] + [_state_value(field[c], v) for v in lastb[c]]
+                        for a, c in zip(vals, val_cols)
+                    ),
+                )
+            )
         probes = ~is_b
         if not probes.any():
             return
@@ -782,6 +490,9 @@ def _temporal_enrich_bucketed(
             "probe_ts": pdf.loc[probes, ts].to_numpy(),
         }
         m = pd.Series(matched)
+        # .where (not masked assignment): upcasts an int64 carry to
+        # float64-with-NaN instead of raising on None — Arrow maps the
+        # integral floats back to the declared long output type
         out["build_ts"] = pdf[ts].iloc[idx].reset_index(drop=True).where(m).to_numpy()
         for c in val_cols:
             out[c] = pdf[c].iloc[idx].reset_index(drop=True).where(m).to_numpy()
@@ -796,26 +507,12 @@ def _temporal_enrich_bucketed(
             *[T.StructField(c, field[c]) for c in val_cols],
         ]
     )
-    state_t = T.StructType(
-        [
-            T.StructField("ks", T.ArrayType(field[key], False)),
-            T.StructField("bts", T.ArrayType(T.LongType(), False)),
-        ]
-        + [
-            T.StructField(f"bv{i}", T.ArrayType(field[c], True))
-            for i, c in enumerate(val_cols)
-        ]
-    )
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_t,
-            stateStructType=state_t,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # NoTimeout: the latest dim version must persist for the stream's
+    # lifetime (fix_is_new's unbounded ValueState class)
+    return _by_bucket(
+        events, key, fn, out_t,
+        [("bts", T.LongType())] + [(f"bv{i}", field[c]) for i, c in enumerate(val_cols)],
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -828,7 +525,6 @@ def temporal_join(
     build_type: str = "click",
     probe_type: str = "purchase",
     value_col: str = "value",
-    buckets: int | None = None,
 ) -> DataFrame:
     """Stream-stream backward as-of (temporal) join as ONE keyed
     stateful operator — Flink's temporal/as-of join shape, the
@@ -861,176 +557,39 @@ def temporal_join(
     (the asof_join precedent), so a string key or an integer value
     column round-trips instead of silently miscasting; only the state
     ``bts`` is pinned long (epoch micros).
+
+    The value carry is a value-level ffill (``where(is_b).ffill()``,
+    segmented per key within the bucket), so a NULL-valued build shows
+    the previous non-NULL build value of the same micro-batch, while
+    its own ts is the build_ts; across a batch boundary only the stored
+    last build (value possibly NULL) carries.
     """
-    import pandas as pd
+    field = {c: events.schema[c].dataType for c in (key, ts, id_col, value_col)}
 
-    from pyspark.sql import types as T
-
-    if buckets:
-        return _temporal_join_bucketed(
-            events, key, ts, id_col, type_col, build_type, probe_type,
-            value_col, buckets,
+    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        ks, bts, bval = (
+            [list(a) for a in state.get] if state.exists else [[], [], []]
         )
-    _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        bts_us, bval = state.get if state.exists else (None, None)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
+        pdf = _batch(pdfs)
+        if pdf is None:
             return
-        pdf = pd.concat(frames)
         pdf = pdf[pdf[type_col].isin([build_type, probe_type])]
         if not len(pdf):
             return
-        if bts_us is not None:
-            seed = pd.DataFrame(
-                [
-                    {
-                        ts: pd.Timestamp(bts_us, unit="us"),
-                        type_col: build_type,
-                        value_col: bval,
-                    }
-                ]
-            )
-            for c in (ts, value_col):
-                # a None read back from state (LEFT output permits a
-                # NULL-valued build carry) cannot cast into a
-                # non-nullable numpy dtype — leave it and let concat
-                # upcast, exactly as temporal_enrich's seed does
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
-        is_b = pdf[type_col] == build_type
-        pdf = pdf.assign(_side=(~is_b).astype(int))
-        pdf = pdf.sort_values([ts, "_side", value_col], kind="mergesort")
-        is_b = pdf[type_col] == build_type
-        carry_ts = pdf[ts].where(is_b).ffill()
-        carry_val = pdf[value_col].where(is_b).ffill()
-        builds = pdf.loc[is_b]
-        if len(builds):
-            last = builds.iloc[-1]
-            v = last[value_col]
-            # coerce to the DECLARED state type before update: a batch
-            # with any NULL in the value column arrives float64-upcast,
-            # and a float written into a long state field is silently
-            # dropped by the state serializer (temporal_enrich's
-            # r10 int-tombstone finding, applied here too)
-            if pd.isna(v):
-                v = None
-            elif isinstance(field[value_col], _INTEGRAL_T):
-                v = int(v)
-            elif isinstance(field[value_col], (T.DoubleType, T.FloatType)):
-                v = float(v)
-            else:
-                v = v.item() if hasattr(v, "item") else v
-            state.update((int(last[ts].value // 1000), v))
-        probes = ~is_b
-        if probes.any():
-            yield pd.DataFrame(
-                {
-                    id_col: _exact_ids(pdf.loc[probes, id_col]),
-                    key: key_tuple[0],
-                    "probe_ts": pdf.loc[probes, ts].to_numpy(),
-                    "probe_value": pdf.loc[probes, value_col].to_numpy(),
-                    "build_ts": carry_ts.loc[probes].to_numpy(),
-                    "build_value": carry_val.loc[probes].to_numpy(),
-                }
-            )
-
-    # field types follow the input schema; only bts is pinned (micros)
-    field = {c: events.schema[c].dataType for c in (key, ts, id_col, value_col)}
-    out_t = T.StructType(
-        [
-            T.StructField(id_col, field[id_col]),
-            T.StructField(key, field[key]),
-            T.StructField("probe_ts", field[ts]),
-            T.StructField("probe_value", field[value_col]),
-            T.StructField("build_ts", field[ts]),
-            T.StructField("build_value", field[value_col]),
-        ]
-    )
-    state_t = T.StructType(
-        [T.StructField("bts", T.LongType()), T.StructField("bval", field[value_col])]
-    )
-    # NoTimeout: the latest dimension/build version must persist for
-    # the stream's lifetime, exactly like fix_is_new's first-seen state
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_t,
-        stateStructType=state_t,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _temporal_join_bucketed(
-    events: DataFrame,
-    key: str,
-    ts: str,
-    id_col: str,
-    type_col: str,
-    build_type: str,
-    probe_type: str,
-    value_col: str,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`temporal_join` — the
-    :func:`_temporal_enrich_bucketed` group-call-count trick applied to
-    the single-value as-of join. The per-key carry is the SAME
-    value-level ffill as the per-key form (``where(is_b).ffill()``,
-    which deliberately lets a NULL-valued carried build's value fall
-    through to the previous non-NULL build — that quirk is part of the
-    operator's documented contract), run segmented per key with a
-    groupby ffill. Sort adds the value tie-break within (key, ts,
-    side), so simultaneous builds still resolve to the max value, and
-    the per-key state update is the max-merge the single-key form
-    does. Row-level output is identical; only the state-store key
-    granularity changes.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    field = {c: events.schema[c].dataType for c in (key, ts, id_col, value_col)}
-
-    def _st_val(c, v):
-        if pd.isna(v):
-            return None
-        if isinstance(field[c], _INTEGRAL_T):
-            return int(v)
-        if isinstance(field[c], (T.DoubleType, T.FloatType)):
-            return float(v)
-        return v.item() if hasattr(v, "item") else v
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
-        pdf = pdf[pdf[type_col].isin([build_type, probe_type])]
-        if not len(pdf):
-            return
-        if st is not None and len(st[0]):
+        present = set(pdf[key].unique().tolist())
+        seeded = [i for i, k in enumerate(ks) if k in present]
+        if seeded:
             seed = pd.DataFrame(
                 {
-                    key: list(st[0]),
-                    ts: pd.to_datetime(pd.Series(list(st[1]), dtype="int64"), unit="us"),
+                    key: [ks[i] for i in seeded],
+                    ts: pd.to_datetime(
+                        pd.Series([bts[i] for i in seeded], dtype="int64"), unit="us"
+                    ),
                     type_col: build_type,
-                    value_col: pd.Series(list(st[2]), dtype="object"),
+                    value_col: pd.Series([bval[i] for i in seeded], dtype="object"),
                 }
             )
-            for c in (key, ts, value_col):
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
+            pdf = _with_seeds(pdf, seed, id_col)
         is_b = pdf[type_col] == build_type
         pdf = (
             pdf.assign(_side=(~is_b).astype(int))
@@ -1043,22 +602,30 @@ def _temporal_join_bucketed(
         carry_val = pdf[value_col].where(is_b).groupby(karr).ffill()
         builds = pdf.loc[is_b]
         if len(builds):
-            lastb = builds.groupby(key, sort=True).tail(1)
-            new_keys = [_st_val(key, v) for v in lastb[key]]
-            bts_list = [int(v) for v in lastb[ts].astype("int64") // 1000]
-            vals_list = [_st_val(value_col, v) for v in lastb[value_col]]
-            state.update((new_keys, bts_list, vals_list))
-        probes = ~is_b
+            # each key's last build is the max-merge of its stored and
+            # batch versions; keys absent from the batch keep theirs
+            lastb = builds.groupby(key, sort=False).tail(1)
+            new_ks = [_state_value(field[key], k) for k in lastb[key]]
+            fresh = set(new_ks)
+            kept = [i for i, k in enumerate(ks) if k not in fresh]
+            state.update(
+                (
+                    [ks[i] for i in kept] + new_ks,
+                    [bts[i] for i in kept] + (lastb[ts].astype("int64") // 1000).tolist(),
+                    [bval[i] for i in kept]
+                    + [_state_value(field[value_col], v) for v in lastb[value_col]],
+                )
+            )
+        probes = (~is_b).to_numpy()
         if probes.any():
-            pr = probes.to_numpy()
             yield pd.DataFrame(
                 {
-                    id_col: _exact_ids(pdf.loc[pr, id_col]),
-                    key: pdf.loc[pr, key].to_numpy(),
-                    "probe_ts": pdf.loc[pr, ts].to_numpy(),
-                    "probe_value": pdf.loc[pr, value_col].to_numpy(),
-                    "build_ts": carry_ts.loc[pr].to_numpy(),
-                    "build_value": carry_val.loc[pr].to_numpy(),
+                    id_col: _exact_ids(pdf.loc[probes, id_col]),
+                    key: karr[probes],
+                    "probe_ts": pdf.loc[probes, ts].to_numpy(),
+                    "probe_value": pdf.loc[probes, value_col].to_numpy(),
+                    "build_ts": carry_ts.loc[probes].to_numpy(),
+                    "build_value": carry_val.loc[probes].to_numpy(),
                 }
             )
 
@@ -1072,23 +639,12 @@ def _temporal_join_bucketed(
             T.StructField("build_value", field[value_col]),
         ]
     )
-    state_t = T.StructType(
-        [
-            T.StructField("ks", T.ArrayType(field[key], False)),
-            T.StructField("bts", T.ArrayType(T.LongType(), False)),
-            T.StructField("bval", T.ArrayType(field[value_col], True)),
-        ]
-    )
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_t,
-            stateStructType=state_t,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # NoTimeout: the latest dimension/build version must persist for
+    # the stream's lifetime, exactly like fix_is_new's first-seen state
+    return _by_bucket(
+        events, key, fn, out_t,
+        [("bts", T.LongType()), ("bval", field[value_col])],
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1098,117 +654,54 @@ def transition_pairs(
     ts: str = "ts",
     id_col: str = "event_id",
     type_col: str = "event_type",
-    buckets: int | None = None,
 ) -> DataFrame:
     """Per-key consecutive-event transition extraction, exact
     keyed-state form — the streaming twin of the batch LAG window
     behind ``behavior_pagerank``'s edge aggregation. State = the key's
     LAST event type plus the implicit had-any-event flag
-    (``state.exists``), O(1) per key forever; each micro-batch sorts
-    its group rows by (ts, id), shifts the type column down one
-    (vectorized), and fills the first row's predecessor from the
-    carry — so a transition whose two events STRADDLE a micro-batch
-    boundary is emitted exactly once, by the batch that sees the
-    second event. A batch-local lead()/lag() would silently drop
-    exactly those pairs: the cross-batch hazard that makes this an
-    operator, not a window.
+    (membership in the bucket's key array), O(1) per key forever; each
+    micro-batch sorts its rows by (key, ts, id), shifts the type column
+    down one per key (vectorized), and fills each key's first row's
+    predecessor from the carry — so a transition whose two events
+    STRADDLE a micro-batch boundary is emitted exactly once, by the
+    batch that sees the second event. A batch-local lead()/lag() would
+    silently drop exactly those pairs: the cross-batch hazard that makes
+    this an operator, not a window.
 
     NULL rule mirrors the batch window EXACTLY: a pair is emitted iff
     the row has a predecessor AND its own type (dst) is non-NULL —
     the batch's lead() filter keeps (NULL -> x) with a NULL src and
     drops (x -> NULL); a NULL carried type is stored DISTINCTLY from
-    no-state (state.exists disambiguates), so the pair after a NULL
+    no-state (key membership disambiguates), so the pair after a NULL
     event still emits with a NULL src across a batch boundary. The
     key's output type derives from the input schema (the
     temporal_join standard), so non-long keys work unchanged.
     Output: (key, src, dst), one row per transition; replayed in
     event-time order it converges to the batch lag window exactly
     (cross-batch + NULL edge test-pinned)."""
-    key_t = {f.name: f.dataType.simpleString() for f in events.schema.fields}[key]
-    if buckets:
-        return _transition_pairs_bucketed(
-            events, key, ts, id_col, type_col, key_t, buckets
-        )
+    key_dt = events.schema[key].dataType
 
     def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        had_prev = state.exists
-        (last_type,) = state.get if had_prev else (None,)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
+        stored = dict(zip(*state.get)) if state.exists else {}
+        pdf = _batch(pdfs)
+        if pdf is None:
             return
-        pdf = pd.concat(frames).sort_values([ts, id_col])
-        dst = pdf[type_col].reset_index(drop=True)
-        src = dst.shift(1)
-        if had_prev and last_type is not None:
-            src.iloc[0] = last_type
-        has_prev = pd.Series(True, index=dst.index)
-        if not had_prev:
-            has_prev.iloc[0] = False
-        last = dst.iloc[-1]
-        state.update((None if pd.isna(last) else last,))
-        mask = has_prev & dst.notna()
-        if mask.any():
-            yield pd.DataFrame(
-                {
-                    key: key_tuple[0],
-                    "src": src[mask].to_numpy(),
-                    "dst": dst[mask].to_numpy(),
-                }
-            )
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key} {key_t}, src string, dst string",
-        stateStructType="last_type string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _transition_pairs_bucketed(
-    events: DataFrame,
-    key: str,
-    ts: str,
-    id_col: str,
-    type_col: str,
-    key_t: str,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`transition_pairs` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick). State
-    per bucket: parallel (keys, last_type) arrays — membership in the
-    keys array IS the had-any-event flag, so a stored NULL type stays
-    distinct from no-state exactly as ``state.exists`` did. The shift
-    runs segmented per key; each key-segment head fills its
-    predecessor from the stored type. Output rows identical."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        stored = dict(zip(st[0], st[1])) if st is not None else {}
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([key, ts, id_col])
+        pdf = pdf.sort_values([key, ts, id_col])
         karr = pdf[key]
         dst = pdf[type_col]
         src = dst.groupby(karr.to_numpy()).shift(1)
         head = ~karr.duplicated()
         if stored:
             # key-segment heads read their stored predecessor (NaN for
-            # a stored-NULL type — emitted as a NULL src, like the
-            # single-key form)
+            # a stored-NULL type — emitted as a NULL src)
             src = src.where(~head, karr.map(stored))
             has_prev = ~head | karr.isin(stored.keys())
         else:
             has_prev = ~head
         last_rows = ~karr.duplicated(keep="last")
         for k, t in zip(karr[last_rows], dst[last_rows]):
-            k = int(k) if hasattr(k, "item") else k
-            stored[k] = None if pd.isna(t) else t
-        state.update((list(stored.keys()), list(stored.values())))
+            stored[_state_value(key_dt, k)] = None if pd.isna(t) else t
+        state.update((list(stored), list(stored.values())))
         mask = (has_prev & dst.notna()).to_numpy()
         if mask.any():
             yield pd.DataFrame(
@@ -1219,16 +712,11 @@ def _transition_pairs_bucketed(
                 }
             )
 
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=f"{key} {key_t}, src string, dst string",
-            stateStructType=f"ks array<{key_t}>, lt array<string>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _by_bucket(
+        events, key, fn,
+        f"{key} {key_dt.simpleString()}, src string, dst string",
+        [("lt", T.StringType())],
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1240,7 +728,6 @@ def funnel_chain_n(
     ts: str = "ts",
     id_col: str = "event_id",
     type_col: str = "event_type",
-    buckets: int | None = None,
 ) -> DataFrame:
     """N-stage CEP funnel attribution as ONE keyed stateful operator —
     the generalized pattern chain the reference's flink-cep dependency
@@ -1268,12 +755,12 @@ def funnel_chain_n(
 
     Output: (id, key, probe_ts, {stages[-1]}_ts, ..., {stages[0]}_ts)
     with LEFT semantics — a NULL suffix where the chain ran out.
+
+    Per bucket, each stored key present in the batch re-enters as one
+    seed row per non-empty level carrying its stored vector, the
+    per-level carry ffills segmented by key, and each key's last stage
+    row per level writes that key's new state slice.
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
     stages = tuple(stages)
     M = len(stages)
     if M < 1:
@@ -1288,52 +775,39 @@ def funnel_chain_n(
     # the vector [ts_i, link_{i-1}, ..., link_0], all epoch micros
     offs = [i * (i + 1) // 2 for i in range(M + 1)]
     total = offs[M]
-    if buckets:
-        return _funnel_chain_n_bucketed(
-            events, stages, probe_type, key, ts, id_col, type_col,
-            _ORD, offs, total, buckets,
-        )
+    field = {c: events.schema[c].dataType for c in (key, ts, id_col)}
 
     def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        flat = (
-            list(state.get[0])
-            if state.exists and state.get[0] is not None
-            else [None] * total
-        )
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
+        flat_by = dict(zip(*state.get)) if state.exists else {}
+        pdf = _batch(pdfs)
+        if pdf is None:
             return
-        pdf = pd.concat(frames)
         pdf = pdf[pdf[type_col].isin(list(_ORD))]
         if not len(pdf):
             return
         # _seed: which level this row re-enters from state (-1 = fresh)
         pdf = pdf.assign(_seed=-1)
-        seeds = []
-        for li, stg in enumerate(stages):
-            sts = flat[offs[li]]
-            if sts is not None:
-                seeds.append(
-                    {ts: pd.Timestamp(sts, unit="us"), type_col: stg, "_seed": li}
-                )
+        seeds = [
+            {key: k, ts: pd.Timestamp(flat_by[k][offs[li]], unit="us"), type_col: stg, "_seed": li}
+            for k in pdf[key].unique().tolist()
+            if k in flat_by
+            for li, stg in enumerate(stages)
+            if flat_by[k][offs[li]] is not None
+        ]
         if seeds:
-            seed = pd.DataFrame(seeds)
-            try:
-                seed[ts] = seed[ts].astype(pdf[ts].dtype)
-            except (TypeError, ValueError):
-                pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
+            pdf = _with_seeds(pdf, pd.DataFrame(seeds), id_col)
         pdf = (
             pdf.assign(_ord=pdf[type_col].map(_ORD))
-            .sort_values([ts, "_ord"], kind="mergesort")
+            .sort_values([key, ts, "_ord"], kind="mergesort")
             .reset_index(drop=True)
         )
         n = len(pdf)
         types_arr = pdf[type_col].to_numpy()
         seed_lvl = pdf["_seed"].to_numpy()
+        karr = pdf[key].to_numpy()
         ts_us = pdf[ts].astype("int64").to_numpy() // 1000  # ns -> us
         carry = None  # after level li: (n, li+1) vector of last li-row <= pos
-        new_flat = list(flat)
+        new_flat_by = {k: list(v) for k, v in flat_by.items()}
         for li, stg in enumerate(stages):
             is_s = types_arr == stg
             vec = np.full((n, li + 1), np.nan)
@@ -1343,158 +817,10 @@ def funnel_chain_n(
                 # position — the link resolves at arrival
                 fresh = is_s & (seed_lvl != li)
                 vec[fresh, 1:] = carry[fresh]
-            sr = np.where(is_s & (seed_lvl == li))[0]
-            if len(sr):
-                stored = flat[offs[li] : offs[li + 1]]
-                vec[sr[0]] = [np.nan if v is None else float(v) for v in stored]
-            pos = pd.Series(np.where(is_s, np.arange(n), np.nan)).ffill()
-            has = pos.notna().to_numpy()
-            idx = pos.fillna(0).astype(int).to_numpy()
-            carry = vec[idx]
-            carry[~has] = np.nan
-            if is_s.any():
-                last = vec[np.where(is_s)[0][-1]]
-                new_flat[offs[li] : offs[li + 1]] = [
-                    None if np.isnan(v) else int(v) for v in last
-                ]
-        state.update((new_flat,))
-        is_p = types_arr == probe_type
-        if not is_p.any():
-            return
-        out = {
-            id_col: _exact_ids(pdf.loc[is_p, id_col]),
-            key: key_tuple[0],
-            "probe_ts": pdf.loc[is_p, ts].to_numpy(),
-        }
-        pv = carry[is_p]  # columns: [ts_{M-1}, link_{M-2}, ..., link_0]
-        for j in range(M):
-            # explicit µs->ns (see _funnel_chain_n_bucketed: pandas'
-            # to_datetime float path intermittently raised on valid
-            # NaN-mixed arrays in long-lived reused workers; carries
-            # are integral µs < 2^53, so this is the same value)
-            vals = pv[:, j]
-            mask = np.isnan(vals)
-            ns_v = np.where(mask, 0, vals).astype("int64") * 1000
-            arr = ns_v.view("M8[ns]").copy()
-            arr[mask] = np.datetime64("NaT")
-            out[f"{stages[M - 1 - j]}_ts"] = arr
-        yield pd.DataFrame(out)
-
-    field = {c: events.schema[c].dataType for c in (key, ts, id_col)}
-    out_t = T.StructType(
-        [
-            T.StructField(id_col, field[id_col]),
-            T.StructField(key, field[key]),
-            T.StructField("probe_ts", field[ts]),
-        ]
-        + [T.StructField(f"{s}_ts", field[ts]) for s in reversed(stages)]
-    )
-    state_t = T.StructType(
-        [T.StructField("flat", T.ArrayType(T.LongType(), True))]
-    )
-    # NoTimeout: funnel attribution state must persist for the
-    # stream's lifetime, like the other as-of carries
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_t,
-        stateStructType=state_t,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _funnel_chain_n_bucketed(
-    events: DataFrame,
-    stages: tuple,
-    probe_type: str,
-    key: str,
-    ts: str,
-    id_col: str,
-    type_col: str,
-    _ORD: dict,
-    offs: list,
-    total: int,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`funnel_chain_n` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick). State
-    per bucket: a keys array plus one flat chain-vector array per key
-    (array<array<long>>). Every stored key re-enters each batch as one
-    seed row per non-empty level carrying its STORED vector (the
-    single-key rule), the per-level positional carry ffills SEGMENTED
-    by key, and each key's last stage row per level writes that key's
-    new state slice. Output rows identical; only the state-store key
-    granularity changes."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    M = len(stages)
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        flat_by = (
-            {k: list(v) for k, v in zip(st[0], st[1])} if st is not None else {}
-        )
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
-        pdf = pdf[pdf[type_col].isin(list(_ORD))]
-        if not len(pdf):
-            return
-        pdf = pdf.assign(_seed=-1)
-        seeds = []
-        for k, flat in flat_by.items():
-            for li, stg in enumerate(stages):
-                sts = flat[offs[li]]
-                if sts is not None:
-                    seeds.append(
-                        {
-                            key: k,
-                            ts: pd.Timestamp(sts, unit="us"),
-                            type_col: stg,
-                            "_seed": li,
-                        }
-                    )
-        if seeds:
-            seed = pd.DataFrame(seeds)
-            for c in (key, ts):
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
-        pdf = (
-            pdf.assign(_ord=pdf[type_col].map(_ORD))
-            .sort_values([key, ts, "_ord"], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        n = len(pdf)
-        types_arr = pdf[type_col].to_numpy()
-        seed_lvl = pdf["_seed"].to_numpy()
-        karr = pdf[key]
-        karr_np = karr.to_numpy()
-        ts_us = pdf[ts].astype("int64").to_numpy() // 1000  # ns -> us
-        carry = None
-        new_flat_by = {k: list(v) for k, v in flat_by.items()}
-        for li, stg in enumerate(stages):
-            is_s = types_arr == stg
-            vec = np.full((n, li + 1), np.nan)
-            vec[is_s, 0] = ts_us[is_s]
-            if li > 0:
-                fresh = is_s & (seed_lvl != li)
-                vec[fresh, 1:] = carry[fresh]
             for r in np.where(is_s & (seed_lvl == li))[0]:
-                stored = flat_by[karr_np[r]][offs[li] : offs[li + 1]]
+                stored = flat_by[karr[r]][offs[li] : offs[li + 1]]
                 vec[r] = [np.nan if v is None else float(v) for v in stored]
-            pos = (
-                pd.Series(np.where(is_s, np.arange(n), np.nan))
-                .groupby(karr_np)
-                .ffill()
-            )
+            pos = pd.Series(np.where(is_s, np.arange(n), np.nan)).groupby(karr).ffill()
             has = pos.notna().to_numpy()
             idx = pos.fillna(0).astype(int).to_numpy()
             carry = vec[idx]
@@ -1502,27 +828,21 @@ def _funnel_chain_n_bucketed(
             if is_s.any():
                 # each key's LAST stage row writes its state slice
                 srows = np.where(is_s)[0]
-                last_per_key = (
-                    pd.Series(srows).groupby(karr_np[srows]).max()
-                )
-                for k, r in last_per_key.items():
-                    kk = int(k) if hasattr(k, "item") else k
-                    nf = new_flat_by.setdefault(kk, [None] * total)
+                for k, r in pd.Series(srows).groupby(karr[srows]).max().items():
+                    nf = new_flat_by.setdefault(_state_value(field[key], k), [None] * total)
                     nf[offs[li] : offs[li + 1]] = [
                         None if np.isnan(v) else int(v) for v in vec[int(r)]
                     ]
-        state.update(
-            (list(new_flat_by.keys()), [new_flat_by[k] for k in new_flat_by])
-        )
+        state.update((list(new_flat_by), list(new_flat_by.values())))
         is_p = types_arr == probe_type
         if not is_p.any():
             return
         out = {
             id_col: _exact_ids(pdf.loc[is_p, id_col]),
-            key: karr_np[is_p],
+            key: karr[is_p],
             "probe_ts": pdf.loc[is_p, ts].to_numpy(),
         }
-        pv = carry[is_p]
+        pv = carry[is_p]  # columns: [ts_{M-1}, link_{M-2}, ..., link_0]
         for j in range(M):
             # explicit µs->ns conversion instead of pd.to_datetime's
             # float path: carries are integral µs in float64 slots
@@ -1548,7 +868,6 @@ def _funnel_chain_n_bucketed(
             out[f"{stages[M - 1 - j]}_ts"] = arr
         yield pd.DataFrame(out)
 
-    field = {c: events.schema[c].dataType for c in (key, ts, id_col)}
     out_t = T.StructType(
         [
             T.StructField(id_col, field[id_col]),
@@ -1557,24 +876,12 @@ def _funnel_chain_n_bucketed(
         ]
         + [T.StructField(f"{s}_ts", field[ts]) for s in reversed(stages)]
     )
-    state_t = T.StructType(
-        [
-            T.StructField("ks", T.ArrayType(field[key], False)),
-            T.StructField(
-                "flats", T.ArrayType(T.ArrayType(T.LongType(), True), False)
-            ),
-        ]
-    )
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_t,
-            stateStructType=state_t,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # NoTimeout: funnel attribution state must persist for the
+    # stream's lifetime, like the other as-of carries
+    return _by_bucket(
+        events, key, fn, out_t,
+        [("flats", T.ArrayType(T.LongType(), True))],
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1587,7 +894,6 @@ def funnel_chain(
     view_type: str = "view",
     click_type: str = "click",
     probe_type: str = "purchase",
-    buckets: int | None = None,
 ) -> DataFrame:
     """The 3-stage funnel (view -> click -> purchase) as an instance of
     :func:`funnel_chain_n` — kept as the named operator the certified
@@ -1602,5 +908,4 @@ def funnel_chain(
         ts=ts,
         id_col=id_col,
         type_col=type_col,
-        buckets=buckets,
     )

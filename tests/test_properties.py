@@ -645,6 +645,8 @@ def test_temporal_enrich_matches_python_asof_model(spark, data):
     from gmall_flink_0526_spark.streaming.replay import replay_stateful
     from gmall_flink_0526_spark.streaming.stateful import temporal_enrich
 
+    from .keyed_models import asof_model
+
     n = data.draw(st.integers(4, 16))
     keys = data.draw(st.lists(st.integers(1, 3), min_size=n, max_size=n))
     # builds get UNIQUE (key, ts) pairs (the pre-aggregated-ties
@@ -683,20 +685,7 @@ def test_temporal_enrich_matches_python_asof_model(spark, data):
         ).collect()
     }
 
-    builds = {
-        (k, ts): val for i, ts, k, typ, val in events if typ == "dimchange"
-    }
-    exp = {}
-    for i, ts, k, typ, val in events:
-        if typ != "order":
-            continue
-        cands = [(bt, bv) for (bk, bt), bv in builds.items() if bk == k and bt <= ts]
-        if cands:
-            bt, bv = max(cands, key=lambda c: c[0])
-            exp[i] = (datetime(2026, 1, 1, 0, 0, bt), bv)
-        else:
-            exp[i] = (None, None)
-    assert got == exp
+    assert got == asof_model(rows, "dimchange", "order")
 
 
 @settings(max_examples=8, deadline=None)

@@ -17,6 +17,7 @@ from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_repla
 from gmall_flink_0526_spark.streaming import stateful
 
 from .conftest import SF_SMOKE
+from .keyed_models import closed_sessions
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -142,25 +143,17 @@ def test_sessionize_bounce_closed_sessions(spark, replay):
         .reset_index()
     )
 
-    ev = events_pdf(spark)
-    gap = pd.Timedelta(minutes=10)
-    expected_rows = []
-    for uid, g in ev.groupby("user_id"):
-        g = g.sort_values(["ts", "event_id"])
-        sizes, n = [], 0
-        last = None
-        for t in g["ts"]:
-            if last is not None and (t - last) > gap:
-                sizes.append(n)
-                n = 0
-            n += 1
-            last = t
-        # open tail session not emitted
-        if sizes:
-            expected_rows.append(
-                (uid, len(sizes), sum(1 for s in sizes if s == 1))
-            )
-    expected = pd.DataFrame(expected_rows, columns=["user_id", "closed_ct", "bounce_ct"])
+    ev = events_pdf(spark)  # (ts, event_id) order
+    closed = closed_sessions(
+        {uid: list(g["ts"]) for uid, g in ev.groupby("user_id")},
+        pd.Timedelta(minutes=10),
+    )
+    expected = (
+        pd.DataFrame(closed, columns=["user_id", "n", "end_ts"])
+        .groupby("user_id")
+        .agg(closed_ct=("n", "size"), bounce_ct=("n", lambda n: int((n == 1).sum())))
+        .reset_index()
+    )
     got = got.sort_values("user_id").reset_index(drop=True)
     expected = expected.sort_values("user_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(

@@ -32,7 +32,11 @@ similarity" contract):
   counts are asserted against the batch numbers), per-epoch wall
   tracking the epoch's own pair output;
 - (r12) the corpus-vertex rank loop's per-iteration wall vs edge
-  count, isolated from the shared pair build.
+  count, isolated from the shared pair build;
+- keys-only (``--only keys_only``, not part of the full probe): the
+  bucketed keyed-state operator's per-batch ``addBatch`` wall at a
+  fixed row count and 1x / 10x / 100x keys must track the batch size,
+  not the key space.
 
 Usage:  python tools/scale_probe.py [--docs 50000] [--vecs 20000]
 Prints one JSON line with timings + bucket stats; paste into SCALE.md.
@@ -668,6 +672,72 @@ def probe_doc_pagerank(spark, sf_dir: str) -> dict:
     }
 
 
+def probe_keys_only(
+    spark, n_rows: int = 40_000, base_keys: int = 400, n_batches: int = 4
+) -> dict:
+    """Keys-only scaling of the bucketed keyed state: the point-in-time
+    enrichment operator (``stateful.temporal_enrich``) replayed over a
+    FIXED row count with 1x, 10x and 100x the key count. Half the rows
+    are dim versions (builds), half are facts (probes); every timestamp
+    is distinct, so no tie rule is in play. Per data micro-batch it
+    reports the ``addBatch`` wall and the state-store size from the
+    query's progress events. With seeding limited to the stored keys
+    present in a batch, ``addBatch`` should track the batch's rows, not
+    the key space. One discarded replay at a tenth of the rows warms
+    the JVM and the Python workers first."""
+    from pyspark.sql import functions as F
+
+    from perfbench.sparkstats import EpochListener
+
+    from gmall_flink_0526_spark.streaming import stateful
+    from gmall_flink_0526_spark.streaming.replay import replay_stateful
+
+    fanout = min(32, spark.sparkContext.defaultParallelism)
+
+    def replay(rows: int, n_keys: int) -> int:
+        ev = spark.range(rows).select(
+            F.col("id").alias("event_id"),
+            F.timestamp_seconds(F.lit(1704067200) + F.col("id")).alias("ts"),
+            F.pmod(F.xxhash64("id", F.lit("k")), F.lit(n_keys)).alias("user_id"),
+            F.when(F.col("id") % 2 == 0, "dimchange").otherwise("order").alias("event_type"),
+            (F.col("id") % 97).cast("double").alias("value"),
+        )
+        return replay_stateful(
+            spark, ev, stateful.temporal_enrich, order_by=["ts", "event_id"],
+            n_files=n_batches, shuffle_partitions=fanout,
+        ).count()
+
+    replay(n_rows // 10, base_keys)
+    listener = EpochListener()
+    spark.streams.addListener(listener)
+    out = {"rows": n_rows, "batches": n_batches, "buckets": stateful._bucket_count(spark)}
+    try:
+        for mult in (1, 10, 100):
+            mark = listener.mark()
+            t0 = time.time()
+            n_out = replay(n_rows, base_keys * mult)
+            wall = round(time.time() - t0, 2)
+            ids, _ = listener.close(mark)
+            eps = [e for e in listener.epochs_of(ids) if e["rows"]]
+            add_ms = [e["phases"]["addBatch"] for e in eps]
+            out[f"keys_x{mult}"] = {
+                "keys": base_keys * mult,
+                "rows_out": n_out,
+                "replay_wall_s": wall,
+                "batch_rows": [e["rows"] for e in eps],
+                "add_batch_ms": add_ms,
+                "add_batch_ms_median": float(np.median(add_ms)) if add_ms else None,
+                "state_memory_bytes": [e["state_memory_bytes"] for e in eps],
+            }
+    finally:
+        spark.streams.removeListener(listener)
+    base = out["keys_x1"]["add_batch_ms_median"]
+    for mult in (10, 100):
+        m = out[f"keys_x{mult}"]["add_batch_ms_median"]
+        out[f"add_batch_ratio_x{mult}"] = round(m / base, 2) if base and m else None
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=50_000)
@@ -677,7 +747,8 @@ def main() -> None:
     ap.add_argument(
         "--only",
         default=None,
-        help="comma-separated probe subset: tfidf_skew,hot_bucket,incremental "
+        help="comma-separated probe subset: tfidf_skew,hot_bucket,incremental,"
+        "keys_only "
         "(default: the full probe)",
     )
     args = ap.parse_args()
@@ -708,6 +779,8 @@ def main() -> None:
                 )
             if "tfidf_skew" in only:
                 out["tfidf_skew"] = probe_tfidf_skew(spark)
+            if "keys_only" in only:
+                out["keys_only"] = probe_keys_only(spark)
             if "hot_bucket" in only:
                 out["hot_bucket_rep"] = probe_hot_bucket_rep(spark, sub_sf1)
             if "incremental" in only:
