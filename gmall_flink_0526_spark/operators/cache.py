@@ -1,26 +1,38 @@
-"""Scoped persist: bounded caching for multi-use intermediates.
+"""Scoped persist: one lifetime rule for per-query and per-epoch frames.
 
 Operators like MinHash-LSH persist intermediates (shingles, band keys)
-that feed several downstream consumers inside one query. A catalog or
-bench session runs dozens of queries back to back in one
-SparkSession, so fire-and-forget ``persist()`` accumulates dead blocks
-across the whole run. ``scoped_persist`` registers the frame in a
-NAMED scope that the *next* catalog query (or the owning stream's
-epoch exit) releases — at most one scope's worth of cache is ever
-live per owner, and unpersisting an already-collected frame is free.
+that feed several downstream consumers inside one query, and the
+streaming ``foreachBatch`` apps pin per-epoch frames (the batch, its
+shingles, a ``localCheckpoint`` that cuts lineage from a store the
+epoch is about to write). A catalog or bench session runs dozens of
+queries back to back in one SparkSession, so fire-and-forget pinning
+accumulates dead blocks across the whole run. Every such frame is
+registered in a NAMED scope instead, and the scope's owner releases
+all of it at once:
+
+- :func:`scoped_persist` persists a frame; :func:`scoped_checkpoint`
+  ``localCheckpoint``-s one. Both register the result in the current
+  scope, so a checkpoint is freed at the same boundary as a persist —
+  never left to Python GC and Spark's asynchronous ContextCleaner.
+- :func:`release_scoped` frees a scope's frames. A checkpoint's blocks
+  belong to the ``LogicalRDD`` under its plan, not to the cache
+  manager (``df.unpersist()`` leaves them pinned), so the scope
+  registers and unpersists that RDD.
+- :func:`cache_scope` runs a block in its own scope and releases it on
+  exit, success or failure. A streaming epoch wraps itself in one, so
+  its frames live exactly one epoch and two concurrent streams — or a
+  stream beside an enclosing batch query — never release each other's
+  frames mid-flight.
 
 Scope NAMES are thread-local (frames live in a process-global dict
-keyed by name): the MAIN thread's unscoped persists register under
-``"default"`` (drained by ``plans.catalog.register`` at the next
-query); a streaming ``foreachBatch`` body wraps its epoch in
-:func:`cache_scope` so two concurrently running streams — or a stream
-beside an enclosing batch query — never unpersist each other's pinned
-frames mid-flight (the r9 ADVICE trap: the drain used to be
-process-global). Defense in depth for code that FORGETS the wrapper:
-an unscoped persist from a non-main thread falls into a
-thread-id-keyed scope, so the main thread's per-query drain can never
-reach it — it leaks until that thread drains itself, which is the
-safe failure (Spark recomputes; nothing is yanked mid-epoch).
+keyed by name). The main thread's unscoped frames register under
+``"default"``, drained by ``plans.catalog.register`` at the next
+query. A thread started for the scope's owner (the overlapped epoch
+writes) runs under the owner's scope via :func:`in_current_scope`.
+Any other unscoped thread falls into a thread-id-keyed scope, so the
+main thread's per-query drain can never reach its frames: they leak
+until that thread drains itself, which is the safe failure (Spark
+recomputes; nothing is yanked mid-epoch).
 """
 
 from __future__ import annotations
@@ -31,7 +43,10 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
-_SCOPES: dict[str, list[DataFrame]] = {}
+# scope name -> pinned handles: persisted DataFrames and the JVM RDDs
+# of localCheckpoints, both released by ``unpersist(False)``
+_SCOPES: dict[str, list] = {}
+_LOCK = threading.Lock()  # an epoch's overlapped writes register concurrently
 _TLS = threading.local()
 
 
@@ -47,21 +62,37 @@ def _current_scope() -> str:
     return f"thread:{threading.get_ident()}"
 
 
+def _register(handle) -> None:
+    with _LOCK:
+        _SCOPES.setdefault(_current_scope(), []).append(handle)
+
+
 def scoped_persist(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it in the current thread's scope for
     release at that scope's next :func:`release_scoped` (for batch
     catalog queries: when the next query starts; inside a
     :func:`cache_scope` block: at block exit)."""
     df.persist()
-    _SCOPES.setdefault(_current_scope(), []).append(df)
+    _register(df)
     return df
 
 
+def scoped_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()`` (eager: the rows are computed now and
+    the result's plan no longer references ``df``'s sources), with the
+    checkpoint's blocks registered in the current scope like a
+    :func:`scoped_persist` frame."""
+    cut = df.localCheckpoint()
+    _register(cut._jdf.queryExecution().logical().rdd())
+    return cut
+
+
 def release_scoped(scope: str | None = None) -> None:
-    """Unpersist every frame registered in ``scope`` (default: the
-    current thread's scope), non-blocking. Other scopes' frames are
-    untouched."""
-    live = _SCOPES.pop(scope if scope is not None else _current_scope(), [])
+    """Unpersist every frame and checkpoint registered in ``scope``
+    (default: the current thread's scope), non-blocking. Other scopes'
+    frames are untouched."""
+    with _LOCK:
+        live = _SCOPES.pop(scope if scope is not None else _current_scope(), [])
     while live:
         try:
             live.pop().unpersist(False)
@@ -70,23 +101,44 @@ def release_scoped(scope: str | None = None) -> None:
 
 
 @contextmanager
-def cache_scope(name: str):
-    """Run a block with its own scoped-persist scope: every
-    ``scoped_persist`` inside (same thread) registers under ``name``,
-    and the scope is drained on exit — success or failure. The owner
-    token the r9 ADVICE asked for: a stream's foreachBatch epoch wraps
-    itself so its guard frames drain per epoch without touching a
-    concurrent stream's (or an enclosing batch query's) frames."""
+def _named(name: str):
     prev = getattr(_TLS, "scope", None)
     _TLS.scope = name
     try:
         yield
     finally:
-        release_scoped(name)
         if prev is None:
             del _TLS.scope
         else:
             _TLS.scope = prev
+
+
+@contextmanager
+def cache_scope(name: str):
+    """Run a block with its own scope: every ``scoped_persist`` and
+    ``scoped_checkpoint`` inside (same thread, or a thread started
+    through :func:`in_current_scope`) registers under ``name``, and the
+    scope is released on exit — success or failure."""
+    with _named(name):
+        try:
+            yield
+        finally:
+            release_scoped(name)
+
+
+def in_current_scope(fn):
+    """Bind ``fn`` to the CALLER's scope: the returned zero-arg callable
+    runs ``fn`` on whatever thread calls it with the caller's scope
+    name set, so its frames are released with the caller's scope
+    rather than leaking into a ``thread:<id>`` one. The caller must
+    join the thread before its scope exits."""
+    name = _current_scope()
+
+    def run():
+        with _named(name):
+            return fn()
+
+    return run
 
 
 # -- corpus-scoped persist ----------------------------------------------

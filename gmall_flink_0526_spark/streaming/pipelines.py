@@ -23,13 +23,18 @@ an independently runnable query pair of (read channel, write channel).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.cache import cache_scope
+from ..operators.cache import (
+    cache_scope,
+    in_current_scope,
+    scoped_checkpoint,
+    scoped_persist,
+)
 from ..operators.filters import filter_deletes
 from ..operators.joins import interval_join
 from ..operators.parse import parse_json_dead_letter, project_map_columns
@@ -40,6 +45,27 @@ from ..sources.registry import ChannelRegistry
 from . import stateful
 
 
+_INSTANCES = itertools.count()
+
+
+def _per_epoch(name: str, body):
+    """The ``foreachBatch`` callable for an app whose epoch ``body``
+    pins data: each epoch runs inside its own :func:`cache_scope`, so
+    every ``scoped_persist`` / ``scoped_checkpoint`` of the epoch
+    (overlapped writes included) is released when the epoch exits,
+    success or failure — one lifetime rule instead of a try/finally
+    per app. The scope name carries a per-INSTANCE token: two
+    concurrent instances of one app (parallel tests, parallel corpora
+    sharing a channel name) must never release each other's frames."""
+    scope = f"stream:{name}:{next(_INSTANCES)}"
+
+    def process(batch: DataFrame, epoch_id: int) -> None:
+        with cache_scope(scope):
+            body(batch, epoch_id)
+
+    return process
+
+
 def _overlap_writes(*thunks) -> None:
     """Run an epoch's INDEPENDENT store writes concurrently (guide
     §2.6: submit independent jobs from a small pool so each job's tail
@@ -47,14 +73,16 @@ def _overlap_writes(*thunks) -> None:
     inputs are persisted or localCheckpoint'd above and whose targets
     are distinct epoch-idempotent directories, so ordering is
     irrelevant; the first failure re-raises, matching the serial
-    behavior a foreachBatch retry depends on."""
+    behavior a foreachBatch retry depends on. Pool threads run under
+    the caller's cache scope, so anything a thunk pins is released
+    with the caller's epoch."""
     if len(thunks) == 1:
         thunks[0]()
         return
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        for f in [pool.submit(t) for t in thunks]:
+        for f in [pool.submit(in_current_scope(t)) for t in thunks]:
             f.result()
 
 
@@ -83,9 +111,9 @@ def base_log_app(
     replay tests that feed that shape.
 
     Either way the split runs inside one ``foreachBatch`` with the
-    batch persisted, keeping the reference's strict one-pass
-    side-output semantics — otherwise each sink would re-read the
-    source.
+    batch persisted for the epoch, keeping the reference's strict
+    one-pass side-output semantics — otherwise each sink would re-read
+    the source.
     """
     from ..operators.parse import explode_with_parent
     from ..schemas import BEHAVIOR_LOG
@@ -93,51 +121,44 @@ def base_log_app(
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
 
     def process_nested(batch: DataFrame, epoch_id: int) -> None:
-        batch.persist()
-        try:
-            clean, dirty = parse_json_dead_letter(batch, log_col, BEHAVIOR_LOG, out="data")
-            reg.write_batch(dirty, "dirty_log")
-            clean = clean.select("data.*").persist()
-            start = clean.filter(F.col("start").isNotNull()).select(
-                "common.*", "start.*", "ts"
-            )
-            reg.write_batch(start, "dwd_start_log")
-            pages = clean.filter(F.col("start").isNull())
-            reg.write_batch(pages.select("common.*", "page.*", "ts"), "dwd_page_log")
-            displays = explode_with_parent(
-                pages.select(
-                    F.col("common.mid").alias("mid"), "page", "displays", "ts"
-                ),
-                "displays",
-                {"page_id": F.col("page.page_id")},
-                out="display",
-            ).select("mid", "display.*", "page_id", "ts")
-            reg.write_batch(displays, "dwd_display_log")
-            clean.unpersist()
-        finally:
-            batch.unpersist()
+        scoped_persist(batch)
+        clean, dirty = parse_json_dead_letter(batch, log_col, BEHAVIOR_LOG, out="data")
+        reg.write_batch(dirty, "dirty_log")
+        clean = scoped_persist(clean.select("data.*"))
+        start = clean.filter(F.col("start").isNotNull()).select(
+            "common.*", "start.*", "ts"
+        )
+        reg.write_batch(start, "dwd_start_log")
+        pages = clean.filter(F.col("start").isNull())
+        reg.write_batch(pages.select("common.*", "page.*", "ts"), "dwd_page_log")
+        displays = explode_with_parent(
+            pages.select(
+                F.col("common.mid").alias("mid"), "page", "displays", "ts"
+            ),
+            "displays",
+            {"page_id": F.col("page.page_id")},
+            out="display",
+        ).select("mid", "display.*", "page_id", "ts")
+        reg.write_batch(displays, "dwd_display_log")
 
     def process_fixture(batch: DataFrame, epoch_id: int) -> None:
-        batch.persist()
-        try:
-            clean, dirty = parse_json_dead_letter(batch, "props", props_schema, out="data")
-            branches = split_stream(
-                clean,
-                {
-                    "dwd_start_log": F.col("event_type") == "signup",
-                    "dwd_page_log": F.col("event_type").isin("view", "click"),
-                    "dwd_display_log": ~F.col("event_type").isin("signup", "view", "click"),
-                },
-            )
-            reg.write_batch(dirty, "dirty_log")
-            for name, df in branches.items():
-                reg.write_batch(df.withColumn("k", F.col("data.k")).drop("data"), name)
-        finally:
-            batch.unpersist()
+        scoped_persist(batch)
+        clean, dirty = parse_json_dead_letter(batch, "props", props_schema, out="data")
+        branches = split_stream(
+            clean,
+            {
+                "dwd_start_log": F.col("event_type") == "signup",
+                "dwd_page_log": F.col("event_type").isin("view", "click"),
+                "dwd_display_log": ~F.col("event_type").isin("signup", "view", "click"),
+            },
+        )
+        reg.write_batch(dirty, "dirty_log")
+        for name, df in branches.items():
+            reg.write_batch(df.withColumn("k", F.col("data.k")).drop("data"), name)
 
     process = process_fixture if props_schema is not None else process_nested
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch("base_log", process))
         .option("checkpointLocation", os.path.join(ckpt, "base_log_app"))
         .start()
     )
@@ -178,52 +199,48 @@ def base_db_app(
         # Stamp source-arrival order BEFORE any join/shuffle: downstream
         # the routing broadcast-join and persist can reorder rows, so a
         # sequence derived later would not be last-writer-wins anymore.
-        batch = batch.withColumn("_seq", F.monotonically_increasing_id()).persist()
-        try:
-            live = filter_deletes(batch)
-            routed = route_by_config(live, F.broadcast(cfg))
-            routed = project_map_columns(routed, "after", "sinkColumns").persist()
-            branches = split_by_sink_type(routed)
-            # K2: dynamic-topic fact sink — topic is a per-record column
-            fact = branches["kafka"].select(
-                F.col("sinkTable").alias("topic"),
-                F.to_json(F.col("after")).alias("value"),
+        batch = scoped_persist(batch.withColumn("_seq", F.monotonically_increasing_id()))
+        live = filter_deletes(batch)
+        routed = route_by_config(live, F.broadcast(cfg))
+        routed = scoped_persist(project_map_columns(routed, "after", "sinkColumns"))
+        branches = split_by_sink_type(routed)
+        # K2: dynamic-topic fact sink — topic is a per-record column
+        fact = branches["kafka"].select(
+            F.col("sinkTable").alias("topic"),
+            F.to_json(F.col("after")).alias("value"),
+        )
+        reg.write_batch(fact, "dwd_fact_log")
+        # K3/K4: per-sink-table dim upsert. ONE driver round-trip for
+        # the (config-sized) routing targets; _all_keys is the
+        # fallback column list for routes with NULL sinkColumns.
+        dim_targets = (
+            branches["dim"]
+            .groupBy("sinkTable", "sinkPk", "sinkColumns")
+            .agg(
+                F.array_sort(
+                    F.array_distinct(F.flatten(F.collect_list(F.map_keys("after"))))
+                ).alias("_all_keys")
             )
-            reg.write_batch(fact, "dwd_fact_log")
-            # K3/K4: per-sink-table dim upsert. ONE driver round-trip for
-            # the (config-sized) routing targets; _all_keys is the
-            # fallback column list for routes with NULL sinkColumns.
-            dim_targets = (
-                branches["dim"]
-                .groupBy("sinkTable", "sinkPk", "sinkColumns")
-                .agg(
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list(F.map_keys("after"))))
-                    ).alias("_all_keys")
-                )
-                .collect()
+            .collect()
+        )
+        for row in dim_targets:
+            dim_rows = branches["dim"].filter(F.col("sinkTable") == row["sinkTable"])
+            pk = row["sinkPk"] or "id"
+            # flatten the map to columns declared in sinkColumns
+            # (falling back to the observed key set when NULL)
+            cols = (
+                row["sinkColumns"].split(",")
+                if row["sinkColumns"]
+                else list(row["_all_keys"])
             )
-            for row in dim_targets:
-                dim_rows = branches["dim"].filter(F.col("sinkTable") == row["sinkTable"])
-                pk = row["sinkPk"] or "id"
-                # flatten the map to columns declared in sinkColumns
-                # (falling back to the observed key set when NULL)
-                cols = (
-                    row["sinkColumns"].split(",")
-                    if row["sinkColumns"]
-                    else list(row["_all_keys"])
-                )
-                dim_flat = dim_rows.select(
-                    *[F.col("after").getItem(c).alias(c) for c in cols], "_seq"
-                )
-                dim_store.ensure_table(spark, row["sinkTable"], dim_flat.drop("_seq"))
-                dim_store.merge(spark, dim_flat, row["sinkTable"], pk, seq_col="_seq")
-            routed.unpersist()
-        finally:
-            batch.unpersist()
+            dim_flat = dim_rows.select(
+                *[F.col("after").getItem(c).alias(c) for c in cols], "_seq"
+            )
+            dim_store.ensure_table(spark, row["sinkTable"], dim_flat.drop("_seq"))
+            dim_store.merge(spark, dim_flat, row["sinkTable"], pk, seq_col="_seq")
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch("base_db", process))
         .option("checkpointLocation", os.path.join(ckpt, "base_db_app"))
         .start()
     )
@@ -617,86 +634,66 @@ def doc_incremental_dedup_app(
     cross-corpus join) scans the store paths, and an un-cut lineage
     would be re-resolved against the post-append store when the writes
     invalidate cached file listings — recomputing ``kept`` against a
-    corpus containing the batch itself.
+    corpus containing the batch itself. The checkpoint, like the
+    epoch's persisted shingles and bands, is released when the epoch
+    exits.
     """
     from ..operators import dedup as D
 
     bands_path = os.path.join(store_root, "sig_bands")
     sh_path = os.path.join(store_root, "sig_shingles")
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    # per-INSTANCE scope token: channel name alone is process-global,
-    # so two concurrent instances of the same app (parallel tests,
-    # parallel corpora sharing a channel name against different
-    # registries) would share one scope and drain each other's
-    # mid-flight pinned frames at epoch exit (r10 advice)
-    scope_token = uuid.uuid4().hex[:12]
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        # the epoch's guard frames (bounded_broadcast routes through
-        # scoped_persist) live in a STREAM-OWNED scope, drained by
-        # cache_scope when the epoch exits — a concurrently running
-        # stream (or an enclosing batch query holding scoped frames)
-        # is never drained by this stream's epochs. Epochs are serial
-        # per stream and the epoch's writes are done at exit, so the
-        # per-epoch drain is safe; without it each micro-batch of a
-        # continuous stream would pin one hot-table frame forever.
-        with cache_scope(f"stream:{out_channel}:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
         sess = batch.sparkSession
-        sh = D.doc_shingles(batch, "doc_id", "text").persist()
-        bands = D.lsh_band_keys(sh).persist()
-        try:
-            self_dup = (
-                D.jaccard_verify(sh, D.lsh_pairs_from_bands(bands))
+        sh = scoped_persist(D.doc_shingles(batch, "doc_id", "text"))
+        bands = scoped_persist(D.lsh_band_keys(sh))
+        self_dup = (
+            D.jaccard_verify(sh, D.lsh_pairs_from_bands(bands))
+            .filter(F.col("jaccard") >= jaccard_min)
+            .select(F.col("doc_b").alias("doc_id"))
+        )
+        if hfs.exists(sess, bands_path):
+            corp_bands = read_epoch_store(sess, bands_path, epoch_id)
+            corp_sh = read_epoch_store(sess, sh_path, epoch_id)
+            # the new side is batch-bounded by contract — broadcast
+            # it so the corpus signature table is map-side joined,
+            # never shuffled (the asymmetry that holds at 100 TB:
+            # corpus grows without bound, a micro-batch does not)
+            cross = D.lsh_candidates_against(F.broadcast(bands), corp_bands)
+            cross_dup = (
+                D.jaccard_verify(sh, cross, sh_b=corp_sh)
                 .filter(F.col("jaccard") >= jaccard_min)
-                .select(F.col("doc_b").alias("doc_id"))
+                .select(F.col("doc_a").alias("doc_id"))
             )
-            if hfs.exists(sess, bands_path):
-                corp_bands = read_epoch_store(sess, bands_path, epoch_id)
-                corp_sh = read_epoch_store(sess, sh_path, epoch_id)
-                # the new side is batch-bounded by contract — broadcast
-                # it so the corpus signature table is map-side joined,
-                # never shuffled (the asymmetry that holds at 100 TB:
-                # corpus grows without bound, a micro-batch does not)
-                cross = D.lsh_candidates_against(F.broadcast(bands), corp_bands)
-                cross_dup = (
-                    D.jaccard_verify(sh, cross, sh_b=corp_sh)
-                    .filter(F.col("jaccard") >= jaccard_min)
-                    .select(F.col("doc_a").alias("doc_id"))
-                )
-                dups = self_dup.union(cross_dup)
-            else:
-                dups = self_dup
-            # cut lineage NOW: after this, no plan references the store
-            kept = batch.join(dups.distinct(), "doc_id", "left_anti").localCheckpoint()
-            # output is epoch-idempotent too: a foreachBatch retry
-            # overwrites its own epoch directory instead of appending a
-            # second copy of the kept set (readers drop/ignore `epoch`)
-            out_ch = reg._get(out_channel)
-            # kept_ids is batch-bounded: broadcast the semi-join filter
-            # so the persisted band/shingle frames are filtered map-side
-            kept_ids = F.broadcast(kept.select("doc_id"))
-            # the three writes all hang off the checkpointed `kept` and
-            # persisted sh/bands — independent, so overlap them
-            _overlap_writes(
-                lambda: kept.write.mode("overwrite").parquet(
-                    os.path.join(out_ch.path, f"epoch={epoch_id}")
-                ),
-                lambda: bands.join(kept_ids, "doc_id").write.mode("overwrite").parquet(
-                    os.path.join(bands_path, f"epoch={epoch_id}")
-                ),
-                lambda: sh.join(kept_ids, "doc_id").write.mode("overwrite").parquet(
-                    os.path.join(sh_path, f"epoch={epoch_id}")
-                ),
-            )
-        finally:
-            sh.unpersist()
-            bands.unpersist()
+            dups = self_dup.union(cross_dup)
+        else:
+            dups = self_dup
+        # cut lineage NOW: after this, no plan references the store
+        kept = scoped_checkpoint(batch.join(dups.distinct(), "doc_id", "left_anti"))
+        # output is epoch-idempotent too: a foreachBatch retry
+        # overwrites its own epoch directory instead of appending a
+        # second copy of the kept set (readers drop/ignore `epoch`)
+        out_ch = reg._get(out_channel)
+        # kept_ids is batch-bounded: broadcast the semi-join filter
+        # so the persisted band/shingle frames are filtered map-side
+        kept_ids = F.broadcast(kept.select("doc_id"))
+        # the three writes all hang off the checkpointed `kept` and
+        # persisted sh/bands — independent, so overlap them
+        _overlap_writes(
+            lambda: kept.write.mode("overwrite").parquet(
+                os.path.join(out_ch.path, f"epoch={epoch_id}")
+            ),
+            lambda: bands.join(kept_ids, "doc_id").write.mode("overwrite").parquet(
+                os.path.join(bands_path, f"epoch={epoch_id}")
+            ),
+            lambda: sh.join(kept_ids, "doc_id").write.mode("overwrite").parquet(
+                os.path.join(sh_path, f"epoch={epoch_id}")
+            ),
+        )
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch(out_channel, process))
         .option("checkpointLocation", os.path.join(ckpt, "doc_incremental_dedup"))
         .start()
     )
@@ -727,7 +724,8 @@ def substring_dedup_app(
     crash rule (a foreachBatch retry OVERWRITES its own ``epoch=<id>``
     directory; reads prune to ``epoch < current``), and the cut rows
     are ``localCheckpoint``-ed before any store write so their lineage
-    never re-resolves against the post-append store.
+    never re-resolves against the post-append store; the checkpoint is
+    released when the epoch exits.
 
     Incremental semantics, documented like ``doc_incremental_dedup``'s:
     an early doc keeps runs that only LATER become duplicated — the
@@ -741,53 +739,44 @@ def substring_dedup_app(
     L = run_len or D.SUBSTR_RUN
     idx_path = os.path.join(store_root, "win_index")
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:{out_channel}:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
         sess = batch.sparkSession
-        toks = D.doc_tokens(batch, "doc_id", "text").persist()
-        grams = D.gram_positions_from(toks, L).persist()
-        try:
-            grid = grams.groupBy("gh").agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            )
-            if hfs.exists(sess, idx_path):
-                merged = read_epoch_store(sess, idx_path, epoch_id).union(grid)
-            else:
-                merged = grid
-            dup = (
-                merged.groupBy("gh")
-                .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
-                .filter(F.col("lo") != F.col("hi"))
-                .select("gh")
-            )
-            starts = (
-                grams.join(dup, "gh")
-                .groupBy("doc_id")
-                .agg(F.sort_array(F.collect_list("pos")).alias("starts"))
-            )
-            cut = D.substring_cut_rows(toks, starts, L).localCheckpoint()
-            out_ch = reg._get(out_channel)
-            # cut is checkpointed and grid hangs off the persisted
-            # grams — independent writes, overlap them (§2.6)
-            _overlap_writes(
-                lambda: cut.write.mode("overwrite").parquet(
-                    os.path.join(out_ch.path, f"epoch={epoch_id}")
-                ),
-                lambda: grid.write.mode("overwrite").parquet(
-                    os.path.join(idx_path, f"epoch={epoch_id}")
-                ),
-            )
-        finally:
-            grams.unpersist()
-            toks.unpersist()
+        toks = scoped_persist(D.doc_tokens(batch, "doc_id", "text"))
+        grams = scoped_persist(D.gram_positions_from(toks, L))
+        grid = grams.groupBy("gh").agg(
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        )
+        if hfs.exists(sess, idx_path):
+            merged = read_epoch_store(sess, idx_path, epoch_id).union(grid)
+        else:
+            merged = grid
+        dup = (
+            merged.groupBy("gh")
+            .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
+            .filter(F.col("lo") != F.col("hi"))
+            .select("gh")
+        )
+        starts = (
+            grams.join(dup, "gh")
+            .groupBy("doc_id")
+            .agg(F.sort_array(F.collect_list("pos")).alias("starts"))
+        )
+        cut = scoped_checkpoint(D.substring_cut_rows(toks, starts, L))
+        out_ch = reg._get(out_channel)
+        # cut is checkpointed and grid hangs off the persisted
+        # grams — independent writes, overlap them (§2.6)
+        _overlap_writes(
+            lambda: cut.write.mode("overwrite").parquet(
+                os.path.join(out_ch.path, f"epoch={epoch_id}")
+            ),
+            lambda: grid.write.mode("overwrite").parquet(
+                os.path.join(idx_path, f"epoch={epoch_id}")
+            ),
+        )
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch(out_channel, process))
         .option("checkpointLocation", os.path.join(ckpt, "substring_dedup"))
         .start()
     )
@@ -876,11 +865,6 @@ def similarity_graph_app(
     pairs_path = os.path.join(store_root, "pairs")
     layout_path = os.path.join(store_root, "_SH_LAYOUT")
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:simgraph:{scope_token}"):
-            _epoch(batch, epoch_id)
 
     def _bkt(col_name: str):
         return F.pmod(F.xxhash64(F.col(col_name)), F.lit(SIM_SH_BUCKETS))
@@ -916,94 +900,86 @@ def similarity_graph_app(
         hfs.write_text_atomic(sess, layout_path, "bucketed" if bucketed else "flat")
         return bucketed
 
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
+    def process(batch: DataFrame, epoch_id: int) -> None:
         sess = batch.sparkSession
         bucketed = _resolve_layout(sess, batch)
-        bsh = D.doc_shingles(batch, "doc_id", "text").persist()
-        bpref = D.prefix_rows(bsh, jaccard_min, order="hash").persist()
-        cand = None
-        try:
-            if hfs.exists(sess, pref_path):
-                all_pref = read_epoch_store(sess, pref_path, epoch_id).union(bpref)
+        bsh = scoped_persist(D.doc_shingles(batch, "doc_id", "text"))
+        bpref = scoped_persist(D.prefix_rows(bsh, jaccard_min, order="hash"))
+        if hfs.exists(sess, pref_path):
+            all_pref = read_epoch_store(sess, pref_path, epoch_id).union(bpref)
+        else:
+            all_pref = bpref
+        cand = scoped_persist(
+            D.prefix_filter_candidates_against(F.broadcast(bpref), all_pref, jaccard_min)
+        )
+        if hfs.exists(sess, sh_path):
+            if bucketed:
+                # index-shaped verify: read ONLY the store buckets
+                # a candidate doc lives in (<= SIM_SH_BUCKETS ids —
+                # a constant-bounded collect; partition-pruned read)
+                touched = [
+                    r["bkt"]
+                    for r in cand.select(
+                        F.explode(F.array(_bkt("doc_a"), _bkt("doc_b"))).alias("bkt")
+                    )
+                    .distinct()
+                    .collect()
+                ]
+                all_sh = (
+                    read_epoch_store(sess, sh_path, epoch_id)
+                    .filter(F.col("bkt").isin(touched))
+                    .drop("bkt")
+                    .union(bsh)
+                )
             else:
-                all_pref = bpref
-            cand = D.prefix_filter_candidates_against(
-                F.broadcast(bpref), all_pref, jaccard_min
-            ).persist()
-            if hfs.exists(sess, sh_path):
-                if bucketed:
-                    # index-shaped verify: read ONLY the store buckets
-                    # a candidate doc lives in (<= SIM_SH_BUCKETS ids —
-                    # a constant-bounded collect; partition-pruned read)
-                    touched = [
-                        r["bkt"]
-                        for r in cand.select(
-                            F.explode(
-                                F.array(_bkt("doc_a"), _bkt("doc_b"))
-                            ).alias("bkt")
-                        )
-                        .distinct()
-                        .collect()
-                    ]
-                    all_sh = (
-                        read_epoch_store(sess, sh_path, epoch_id)
-                        .filter(F.col("bkt").isin(touched))
-                        .drop("bkt")
-                        .union(bsh)
-                    )
-                else:
-                    # flat layout: the store is small by the gate's
-                    # construction — a whole read beats the bucketed
-                    # write it would take to avoid it (measured, see
-                    # SIM_SH_BUCKET_MIN_DOCS)
-                    all_sh = read_epoch_store(sess, sh_path, epoch_id).union(bsh)
-            else:
-                all_sh = bsh
-            new_pairs = (
-                D.jaccard_verify(all_sh, cand)
-                .filter(F.col("jaccard") >= jaccard_min)
-                .select("doc_a", "doc_b")
-                .localCheckpoint()  # cut lineage before the store writes
-            )
-            def _write_sh():
-                if bucketed:
-                    # repartition ON the bucket key before the
-                    # partitioned write: without it every input task
-                    # fans out to every bucket dir (tasks x
-                    # SIM_SH_BUCKETS small files per epoch — measured
-                    # 2x the whole replay at sf0.1, r13 VERDICT #2);
-                    # with it each bucket is written by exactly one
-                    # task, so the epoch adds at most SIM_SH_BUCKETS
-                    # files
-                    bsh.withColumn("bkt", _bkt("doc_id")).repartition(
-                        F.col("bkt")
-                    ).write.partitionBy("bkt").mode("overwrite").parquet(
-                        os.path.join(sh_path, f"epoch={epoch_id}")
-                    )
-                else:
-                    bsh.write.mode("overwrite").parquet(
-                        os.path.join(sh_path, f"epoch={epoch_id}")
-                    )
+                # flat layout: the store is small by the gate's
+                # construction — a whole read beats the bucketed
+                # write it would take to avoid it (measured, see
+                # SIM_SH_BUCKET_MIN_DOCS)
+                all_sh = read_epoch_store(sess, sh_path, epoch_id).union(bsh)
+        else:
+            all_sh = bsh
+        # cut lineage before the store writes
+        new_pairs = scoped_checkpoint(
+            D.jaccard_verify(all_sh, cand)
+            .filter(F.col("jaccard") >= jaccard_min)
+            .select("doc_a", "doc_b")
+        )
 
-            # pairs are checkpointed, bpref/bsh persisted — the three
-            # epoch writes are independent, overlap them (§2.6)
-            _overlap_writes(
-                lambda: new_pairs.write.mode("overwrite").parquet(
-                    os.path.join(pairs_path, f"epoch={epoch_id}")
-                ),
-                lambda: bpref.write.mode("overwrite").parquet(
-                    os.path.join(pref_path, f"epoch={epoch_id}")
-                ),
-                _write_sh,
-            )
-        finally:
-            if cand is not None:
-                cand.unpersist()
-            bpref.unpersist()
-            bsh.unpersist()
+        def _write_sh():
+            if bucketed:
+                # repartition ON the bucket key before the
+                # partitioned write: without it every input task
+                # fans out to every bucket dir (tasks x
+                # SIM_SH_BUCKETS small files per epoch — measured
+                # 2x the whole replay at sf0.1, r13 VERDICT #2);
+                # with it each bucket is written by exactly one
+                # task, so the epoch adds at most SIM_SH_BUCKETS
+                # files
+                bsh.withColumn("bkt", _bkt("doc_id")).repartition(
+                    F.col("bkt")
+                ).write.partitionBy("bkt").mode("overwrite").parquet(
+                    os.path.join(sh_path, f"epoch={epoch_id}")
+                )
+            else:
+                bsh.write.mode("overwrite").parquet(
+                    os.path.join(sh_path, f"epoch={epoch_id}")
+                )
+
+        # pairs are checkpointed, bpref/bsh persisted — the three
+        # epoch writes are independent, overlap them (§2.6)
+        _overlap_writes(
+            lambda: new_pairs.write.mode("overwrite").parquet(
+                os.path.join(pairs_path, f"epoch={epoch_id}")
+            ),
+            lambda: bpref.write.mode("overwrite").parquet(
+                os.path.join(pref_path, f"epoch={epoch_id}")
+            ),
+            _write_sh,
+        )
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch("simgraph", process))
         .option("checkpointLocation", os.path.join(ckpt, "similarity_graph"))
         .start()
     )
@@ -1030,7 +1006,8 @@ def emb_incremental_dedup_app(
     the epoch-idempotent store — ``mode("overwrite")`` into
     ``epoch=<id>`` dirs with ``epoch < current`` pruning, the same
     crash contract as the MinHash app; ``kept`` is localCheckpoint-ed
-    before any store write for the same lineage reason. Cost per
+    before any store write for the same lineage reason and released
+    with the epoch's other pinned frames at epoch exit. Cost per
     batch is batch x cluster-overlap; the stored corpus is touched
     only through its cluster-keyed rows, never rescanned."""
     from ..operators import similarity as S
@@ -1038,18 +1015,8 @@ def emb_incremental_dedup_app(
     vec_path = os.path.join(store_root, "vec_store")
     cent_path = os.path.join(store_root, "centroids")
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    # per-instance token, same reason as doc_incremental_dedup_app
-    scope_token = uuid.uuid4().hex[:12]
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        # same stream-owned scope as doc_incremental_dedup_app: the
-        # store-side keep_cluster_reps guard persists one frame per
-        # micro-batch, drained at epoch exit without touching any
-        # concurrent stream's (or enclosing batch query's) frames
-        with cache_scope(f"stream:{out_channel}:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
         # runtime import: plans.similarity owns the SemDeDup constants
         # and already imports streaming modules transitively
         from ..operators import dedup as D
@@ -1063,95 +1030,89 @@ def emb_incremental_dedup_app(
         )
 
         sess = batch.sparkSession
-        batch = batch.persist()
-        assigned = None
-        try:
-            if hfs.exists(sess, cent_path):
-                cents = sorted(
-                    (int(r["c"]), [float(x) for x in r["cv"]])
-                    for r in sess.read.parquet(cent_path).collect()
-                )
-            else:
-                # bootstrap on the first batch; idempotent overwrite
-                k = _semdedup_k(batch.count())
-                cents = S.kmeans_fit(
-                    batch, "embedding", "vec_id", k=k, iters=KM_ITERS,
-                    fit_limit=max(KM_FIT_N, FIT_PER_CLUSTER * k),
-                )
-                sess.createDataFrame(
-                    [(c, cv) for c, cv in cents], "c int, cv array<double>"
-                ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-            assigned = S.with_cluster(batch, "embedding", cents).persist()
-            nrm = F.sqrt(S.norm_sq(F.col("embedding")))
-            ck = assigned.select(F.col("c").cast("int").alias("c"), "vec_id")
-            pairs = D.lsh_pairs_from_bands(
-                ck, max_bucket=SEMDEDUP_MAX_CLUSTER,
-                keys=("c",), id_col="vec_id", out=("ida", "idb"),
+        batch = scoped_persist(batch)
+        if hfs.exists(sess, cent_path):
+            cents = sorted(
+                (int(r["c"]), [float(x) for x in r["cv"]])
+                for r in sess.read.parquet(cent_path).collect()
             )
-            a = assigned.select(
-                F.col("vec_id").alias("ida"), F.col("embedding").alias("va"), nrm.alias("na")
+        else:
+            # bootstrap on the first batch; idempotent overwrite
+            k = _semdedup_k(batch.count())
+            cents = S.kmeans_fit(
+                batch, "embedding", "vec_id", k=k, iters=KM_ITERS,
+                fit_limit=max(KM_FIT_N, FIT_PER_CLUSTER * k),
             )
-            b = assigned.select(
-                F.col("vec_id").alias("idb"), F.col("embedding").alias("vb"), nrm.alias("nb")
+            sess.createDataFrame(
+                [(c, cv) for c, cv in cents], "c int, cv array<double>"
+            ).coalesce(1).write.mode("overwrite").parquet(cent_path)
+        assigned = scoped_persist(S.with_cluster(batch, "embedding", cents))
+        nrm = F.sqrt(S.norm_sq(F.col("embedding")))
+        ck = assigned.select(F.col("c").cast("int").alias("c"), "vec_id")
+        pairs = D.lsh_pairs_from_bands(
+            ck, max_bucket=SEMDEDUP_MAX_CLUSTER,
+            keys=("c",), id_col="vec_id", out=("ida", "idb"),
+        )
+        a = assigned.select(
+            F.col("vec_id").alias("ida"), F.col("embedding").alias("va"), nrm.alias("na")
+        )
+        b = assigned.select(
+            F.col("vec_id").alias("idb"), F.col("embedding").alias("vb"), nrm.alias("nb")
+        )
+        self_dup = (
+            pairs.join(a, "ida")
+            .join(b, "idb")
+            .filter(
+                S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+                >= SEMDEDUP_T
             )
-            self_dup = (
-                pairs.join(a, "ida")
-                .join(b, "idb")
+            .select(F.col("idb").alias("vec_id"))
+        )
+        if hfs.exists(sess, vec_path):
+            store = read_epoch_store(sess, vec_path, epoch_id)
+            store_k = S.keep_cluster_reps(store, SEMDEDUP_MAX_CLUSTER).select(
+                "c",
+                F.col("vec_id").alias("idb"),
+                F.col("embedding").alias("vb"),
+                nrm.alias("nb"),
+            )
+            new_s = assigned.select(
+                F.col("c").cast("int").alias("c"),
+                F.col("vec_id").alias("ida"),
+                F.col("embedding").alias("va"),
+                nrm.alias("na"),
+            )
+            # batch side broadcast: the stored corpus is joined
+            # map-side, never shuffled (the asymmetry that holds
+            # at scale — the store grows, a micro-batch does not)
+            cross_dup = (
+                F.broadcast(new_s)
+                .join(store_k, "c")
                 .filter(
                     S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
                     >= SEMDEDUP_T
                 )
-                .select(F.col("idb").alias("vec_id"))
+                .select(F.col("ida").alias("vec_id"))
             )
-            if hfs.exists(sess, vec_path):
-                store = read_epoch_store(sess, vec_path, epoch_id)
-                store_k = S.keep_cluster_reps(store, SEMDEDUP_MAX_CLUSTER).select(
-                    "c",
-                    F.col("vec_id").alias("idb"),
-                    F.col("embedding").alias("vb"),
-                    nrm.alias("nb"),
-                )
-                new_s = assigned.select(
-                    F.col("c").cast("int").alias("c"),
-                    F.col("vec_id").alias("ida"),
-                    F.col("embedding").alias("va"),
-                    nrm.alias("na"),
-                )
-                # batch side broadcast: the stored corpus is joined
-                # map-side, never shuffled (the asymmetry that holds
-                # at scale — the store grows, a micro-batch does not)
-                cross_dup = (
-                    F.broadcast(new_s)
-                    .join(store_k, "c")
-                    .filter(
-                        S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-                        >= SEMDEDUP_T
-                    )
-                    .select(F.col("ida").alias("vec_id"))
-                )
-                dups = self_dup.union(cross_dup)
-            else:
-                dups = self_dup
-            kept = assigned.join(dups.distinct(), "vec_id", "left_anti").localCheckpoint()
-            out_ch = reg._get(out_channel)
-            # both writes hang off the checkpointed kept — overlap (§2.6)
-            _overlap_writes(
-                lambda: kept.select("vec_id").write.mode("overwrite").parquet(
-                    os.path.join(out_ch.path, f"epoch={epoch_id}")
-                ),
-                lambda: kept.select(
-                    "vec_id", "embedding", F.col("c").cast("int").alias("c")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(vec_path, f"epoch={epoch_id}")
-                ),
-            )
-        finally:
-            if assigned is not None:
-                assigned.unpersist()
-            batch.unpersist()
+            dups = self_dup.union(cross_dup)
+        else:
+            dups = self_dup
+        kept = scoped_checkpoint(assigned.join(dups.distinct(), "vec_id", "left_anti"))
+        out_ch = reg._get(out_channel)
+        # both writes hang off the checkpointed kept — overlap (§2.6)
+        _overlap_writes(
+            lambda: kept.select("vec_id").write.mode("overwrite").parquet(
+                os.path.join(out_ch.path, f"epoch={epoch_id}")
+            ),
+            lambda: kept.select(
+                "vec_id", "embedding", F.col("c").cast("int").alias("c")
+            ).write.mode("overwrite").parquet(
+                os.path.join(vec_path, f"epoch={epoch_id}")
+            ),
+        )
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch(out_channel, process))
         .option("checkpointLocation", os.path.join(ckpt, "emb_incremental_dedup"))
         .start()
     )
@@ -1228,7 +1189,6 @@ def decon_screen_app(
         eval_df.select("vec_id", "embedding").write.mode("overwrite").parquet(tmp)
         hfs.rename(spark, tmp, eval_path)
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
 
     def _read_cents(sess: SparkSession):
         return sorted(
@@ -1265,7 +1225,7 @@ def decon_screen_app(
         tr = S.with_cluster(train, "embedding", cents).select(
             "c", "vec_id", F.col("embedding").alias("vt"), nrm.alias("nt")
         )
-        flags = (
+        flags = scoped_checkpoint(
             tr.join(F.broadcast(ev), "c")
             .withColumn(
                 "cos_sim",
@@ -1273,70 +1233,59 @@ def decon_screen_app(
             )
             .filter(F.col("cos_sim") >= DECON_COS_T)
             .select("vec_id", "eid", "cos_sim")
-            .localCheckpoint()
         )
         flags.write.mode("overwrite").parquet(
             os.path.join(flags_path, f"epoch={epoch_id}")
         )
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:decon_screen:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
         sess = batch.sparkSession
-        batch = batch.persist()
-        allv = None
-        try:
-            fit_ep = (
-                int(hfs.read_text(sess, fit_marker).strip())
-                if hfs.exists(sess, fit_marker)
-                else None
+        batch = scoped_persist(batch)
+        fit_ep = (
+            int(hfs.read_text(sess, fit_marker).strip())
+            if hfs.exists(sess, fit_marker)
+            else None
+        )
+        if fit_ep is not None and epoch_id > fit_ep:
+            _screen_and_write(batch, _read_cents(sess), epoch_id)
+            return
+        # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
+        if hfs.exists(sess, stash_path):
+            allv = read_epoch_store(sess, stash_path, epoch_id).unionByName(
+                batch.select("vec_id", "embedding")
             )
-            if fit_ep is not None and epoch_id > fit_ep:
-                _screen_and_write(batch, _read_cents(sess), epoch_id)
-                return
-            # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
-            if hfs.exists(sess, stash_path):
-                allv = read_epoch_store(sess, stash_path, epoch_id).unionByName(
-                    batch.select("vec_id", "embedding")
-                )
-            else:
-                allv = batch.select("vec_id", "embedding")
-            allv = allv.persist()
-            if fit_ep == epoch_id:
-                # redelivered fit epoch: the stored centroids equal the
-                # deterministic refit bit-for-bit — rewrite the same
-                # backlog flags
-                _screen_and_write(allv, _read_cents(sess), epoch_id)
-            elif allv.count() >= fit_target:
-                cents = S.kmeans_fit(
-                    allv, "embedding", "vec_id", k=k, iters=KM_ITERS,
-                    fit_limit=fit_target,
-                )
-                sess.createDataFrame(
-                    [(c, cv) for c, cv in cents], "c int, cv array<double>"
-                ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-                hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
-                # a crashed first attempt of this epoch can only have
-                # taken THIS branch (the branch choice is a pure
-                # function of the prior stores), but scrub the other
-                # branch's dir anyway — the overwrite-own-epoch rule
-                # held across branches, not per-branch
-                hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
-                _screen_and_write(allv, cents, epoch_id)
-            else:
-                hfs.delete(sess, os.path.join(flags_path, f"epoch={epoch_id}"))
-                batch.select("vec_id", "embedding").write.mode("overwrite").parquet(
-                    os.path.join(stash_path, f"epoch={epoch_id}")
-                )
-        finally:
-            if allv is not None:
-                allv.unpersist()
-            batch.unpersist()
+        else:
+            allv = batch.select("vec_id", "embedding")
+        allv = scoped_persist(allv)
+        if fit_ep == epoch_id:
+            # redelivered fit epoch: the stored centroids equal the
+            # deterministic refit bit-for-bit — rewrite the same
+            # backlog flags
+            _screen_and_write(allv, _read_cents(sess), epoch_id)
+        elif allv.count() >= fit_target:
+            cents = S.kmeans_fit(
+                allv, "embedding", "vec_id", k=k, iters=KM_ITERS,
+                fit_limit=fit_target,
+            )
+            sess.createDataFrame(
+                [(c, cv) for c, cv in cents], "c int, cv array<double>"
+            ).coalesce(1).write.mode("overwrite").parquet(cent_path)
+            hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
+            # a crashed first attempt of this epoch can only have
+            # taken THIS branch (the branch choice is a pure
+            # function of the prior stores), but scrub the other
+            # branch's dir anyway — the overwrite-own-epoch rule
+            # held across branches, not per-branch
+            hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
+            _screen_and_write(allv, cents, epoch_id)
+        else:
+            hfs.delete(sess, os.path.join(flags_path, f"epoch={epoch_id}"))
+            batch.select("vec_id", "embedding").write.mode("overwrite").parquet(
+                os.path.join(stash_path, f"epoch={epoch_id}")
+            )
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch("decon_screen", process))
         .option("checkpointLocation", os.path.join(ckpt, "decon_screen"))
         .start()
     )
@@ -1402,7 +1351,6 @@ def triplet_mine_app(
     fit_marker = os.path.join(store_root, "_FIT_EPOCH")
     fit_target = min(expected_corpus, KM_FIT_N)
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
 
     def _read_cents(sess: SparkSession):
         return sorted(
@@ -1420,12 +1368,11 @@ def triplet_mine_app(
             "cv",
             cents,
         ).withColumnRenamed("c", "clabel")
-        scored = (
+        scored = scoped_checkpoint(
             assigned.join(F.broadcast(probes), F.col("clabel") == F.col("qlabel"))
             .filter(F.col("cid") != F.col("qid"))
             .withColumn("cos_sim", S.cosine(F.col("qv"), F.col("cv")))
             .select("qid", "cid", "cos_sim")
-            .localCheckpoint()
         )
         scored.write.mode("overwrite").parquet(
             os.path.join(scored_path, f"epoch={epoch_id}")
@@ -1445,56 +1392,46 @@ def triplet_mine_app(
         probes.coalesce(1).write.mode("overwrite").parquet(probe_path)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:triplet_mine:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
         sess = batch.sparkSession
-        batch = batch.persist()
-        allv = None
-        try:
-            fit_ep = (
-                int(hfs.read_text(sess, fit_marker).strip())
-                if hfs.exists(sess, fit_marker)
-                else None
+        batch = scoped_persist(batch)
+        fit_ep = (
+            int(hfs.read_text(sess, fit_marker).strip())
+            if hfs.exists(sess, fit_marker)
+            else None
+        )
+        if fit_ep is not None and epoch_id > fit_ep:
+            _score_and_write(batch, _read_cents(sess), epoch_id)
+            return
+        # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
+        if hfs.exists(sess, stash_path):
+            allv = read_epoch_store(sess, stash_path, epoch_id).unionByName(
+                batch.select("vec_id", "embedding")
             )
-            if fit_ep is not None and epoch_id > fit_ep:
-                _score_and_write(batch, _read_cents(sess), epoch_id)
-                return
-            # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
-            if hfs.exists(sess, stash_path):
-                allv = read_epoch_store(sess, stash_path, epoch_id).unionByName(
-                    batch.select("vec_id", "embedding")
-                )
-            else:
-                allv = batch.select("vec_id", "embedding")
-            allv = allv.persist()
-            if fit_ep == epoch_id:
-                # redelivered fit epoch: the stored centroids/probes
-                # equal the deterministic refit bit-for-bit — rewrite
-                # the same backlog scores
-                _score_and_write(allv, _read_cents(sess), epoch_id)
-            elif allv.count() >= fit_target:
-                cents = S.kmeans_fit(
-                    allv, "embedding", "vec_id", k=KM_K, iters=KM_ITERS,
-                    fit_limit=fit_target,
-                )
-                _fit_probes(sess, allv, cents)
-                hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
-                hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
-                _score_and_write(allv, cents, epoch_id)
-            else:
-                hfs.delete(sess, os.path.join(scored_path, f"epoch={epoch_id}"))
-                batch.select("vec_id", "embedding").write.mode("overwrite").parquet(
-                    os.path.join(stash_path, f"epoch={epoch_id}")
-                )
-        finally:
-            if allv is not None:
-                allv.unpersist()
-            batch.unpersist()
+        else:
+            allv = batch.select("vec_id", "embedding")
+        allv = scoped_persist(allv)
+        if fit_ep == epoch_id:
+            # redelivered fit epoch: the stored centroids/probes
+            # equal the deterministic refit bit-for-bit — rewrite
+            # the same backlog scores
+            _score_and_write(allv, _read_cents(sess), epoch_id)
+        elif allv.count() >= fit_target:
+            cents = S.kmeans_fit(
+                allv, "embedding", "vec_id", k=KM_K, iters=KM_ITERS,
+                fit_limit=fit_target,
+            )
+            _fit_probes(sess, allv, cents)
+            hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
+            hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
+            _score_and_write(allv, cents, epoch_id)
+        else:
+            hfs.delete(sess, os.path.join(scored_path, f"epoch={epoch_id}"))
+            batch.select("vec_id", "embedding").write.mode("overwrite").parquet(
+                os.path.join(stash_path, f"epoch={epoch_id}")
+            )
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch("triplet_mine", process))
         .option("checkpointLocation", os.path.join(ckpt, "triplet_mine"))
         .start()
     )
@@ -1554,7 +1491,6 @@ def ptron_gate_app(
     fit_marker = os.path.join(store_root, "_FIT_EPOCH")
     fit_target = min(expected_docs, PC.PTRON_FIT_N)
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
 
     def _read_model(sess: SparkSession):
         r = sess.read.parquet(model_path).collect()[0]
@@ -1566,81 +1502,66 @@ def ptron_gate_app(
         feats = PC.ptron_centered(raw, stats, extra=("lang",))
         xs = [F.col(f"x{j}") for j in range(4)]
         kept = (PC.margin_expr(w, xs) >= 0).cast("long")
-        grid = (
-            feats.groupBy("lang")
-            .agg(
+        grid = scoped_checkpoint(
+            feats.groupBy("lang").agg(
                 F.count(F.lit(1)).alias("total_ct"),
                 F.sum(kept).alias("kept_ct"),
             )
-            .localCheckpoint()
         )
         grid.write.mode("overwrite").parquet(
             os.path.join(grid_path, f"epoch={epoch_id}")
         )
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:ptron_gate:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
         sess = batch.sparkSession
-        batch = batch.persist()
-        allr = None
-        try:
-            fit_ep = (
-                int(hfs.read_text(sess, fit_marker).strip())
-                if hfs.exists(sess, fit_marker)
-                else None
+        batch = scoped_persist(batch)
+        fit_ep = (
+            int(hfs.read_text(sess, fit_marker).strip())
+            if hfs.exists(sess, fit_marker)
+            else None
+        )
+        if fit_ep is not None and epoch_id > fit_ep:
+            stats, w = _read_model(sess)
+            _score_and_write(batch, stats, w, epoch_id)
+            return
+        # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
+        if hfs.exists(sess, stash_path):
+            allr = read_epoch_store(sess, stash_path, epoch_id).unionByName(
+                batch.select("doc_id", "text", "lang")
             )
-            if fit_ep is not None and epoch_id > fit_ep:
-                stats, w = _read_model(sess)
-                _score_and_write(batch, stats, w, epoch_id)
-                return
-            # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
-            if hfs.exists(sess, stash_path):
-                allr = read_epoch_store(sess, stash_path, epoch_id).unionByName(
-                    batch.select("doc_id", "text", "lang")
-                )
-            else:
-                allr = batch.select("doc_id", "text", "lang")
-            allr = allr.persist()
-            if fit_ep == epoch_id:
-                # redelivered fit epoch: the stored model card equals
-                # the deterministic refit bit-for-bit — rewrite the
-                # same backlog grid
-                stats, w = _read_model(sess)
-                _score_and_write(allr, stats, w, epoch_id)
-            elif allr.count() >= fit_target:
-                sample = allr.orderBy("doc_id").limit(fit_target).select(
-                    "doc_id", "text"
-                )
-                raw = PC.ptron_raw_features(sample).persist()
-                try:
-                    stats = PC.ptron_stats(raw)
-                    rows = PC.perceptron_fit(PC.ptron_centered(raw, stats))
-                finally:
-                    raw.unpersist()
-                w = PC.final_weights(rows)
-                sess.createDataFrame(
-                    [tuple([stats[k] for k in ("ns", "s1", "s2", "s3", "thr")] + w)],
-                    "ns long, s1 long, s2 long, s3 long, thr double, "
-                    "w0 long, w1 long, w2 long, w3 long",
-                ).coalesce(1).write.mode("overwrite").parquet(model_path)
-                hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
-                hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
-                _score_and_write(allr, stats, w, epoch_id)
-            else:
-                hfs.delete(sess, os.path.join(grid_path, f"epoch={epoch_id}"))
-                batch.select("doc_id", "text", "lang").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(stash_path, f"epoch={epoch_id}"))
-        finally:
-            if allr is not None:
-                allr.unpersist()
-            batch.unpersist()
+        else:
+            allr = batch.select("doc_id", "text", "lang")
+        allr = scoped_persist(allr)
+        if fit_ep == epoch_id:
+            # redelivered fit epoch: the stored model card equals
+            # the deterministic refit bit-for-bit — rewrite the
+            # same backlog grid
+            stats, w = _read_model(sess)
+            _score_and_write(allr, stats, w, epoch_id)
+        elif allr.count() >= fit_target:
+            sample = allr.orderBy("doc_id").limit(fit_target).select(
+                "doc_id", "text"
+            )
+            raw = scoped_persist(PC.ptron_raw_features(sample))
+            stats = PC.ptron_stats(raw)
+            rows = PC.perceptron_fit(PC.ptron_centered(raw, stats))
+            w = PC.final_weights(rows)
+            sess.createDataFrame(
+                [tuple([stats[k] for k in ("ns", "s1", "s2", "s3", "thr")] + w)],
+                "ns long, s1 long, s2 long, s3 long, thr double, "
+                "w0 long, w1 long, w2 long, w3 long",
+            ).coalesce(1).write.mode("overwrite").parquet(model_path)
+            hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
+            hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
+            _score_and_write(allr, stats, w, epoch_id)
+        else:
+            hfs.delete(sess, os.path.join(grid_path, f"epoch={epoch_id}"))
+            batch.select("doc_id", "text", "lang").write.mode(
+                "overwrite"
+            ).parquet(os.path.join(stash_path, f"epoch={epoch_id}"))
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch("ptron_gate", process))
         .option("checkpointLocation", os.path.join(ckpt, "ptron_gate"))
         .start()
     )
@@ -1808,21 +1729,18 @@ def bloom_filter_app(
         # collapses the staged projections and the shingle lambda
         # re-runs its inlined tokenize per element (textops.tokenize's
         # lambda-inlining note; measured 3.3 s -> sub-second per epoch)
-        sh = D.doc_shingles(batch, "doc_id", "text", ngram=ngram).persist()
-        try:
-            ev = (
-                sh.select(F.explode("s").alias("g"))
-                .select(F.md5("g").alias("gh"))
-                .distinct()
-            )
-            D.bloom_word_table(ev, bits).write.mode("overwrite").parquet(
-                os.path.join(path, f"epoch={epoch_id}")
-            )
-        finally:
-            sh.unpersist(False)
+        sh = scoped_persist(D.doc_shingles(batch, "doc_id", "text", ngram=ngram))
+        ev = (
+            sh.select(F.explode("s").alias("g"))
+            .select(F.md5("g").alias("gh"))
+            .distinct()
+        )
+        D.bloom_word_table(ev, bits).write.mode("overwrite").parquet(
+            os.path.join(path, f"epoch={epoch_id}")
+        )
 
     return (
-        src.writeStream.foreachBatch(process)
+        src.writeStream.foreachBatch(_per_epoch("bloom_filter", process))
         .option("checkpointLocation", os.path.join(ckpt, "bloom_filter"))
         .start()
     )

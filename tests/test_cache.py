@@ -5,6 +5,8 @@ holds at most one (session, corpus dir) worth of persisted frames."""
 
 from __future__ import annotations
 
+import pytest
+
 from gmall_flink_0526_spark.operators import cache
 
 
@@ -163,3 +165,106 @@ def test_corpus_value_shares_scope_and_eviction(spark):
     assert cache.corpus_value(spark, "emb_n:all", "/corpus/a", build) == 42
     assert len(calls) == 3  # release dropped the value too
     cache.release_corpus()
+
+
+def _pinned(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _checkpoint_rdd(df):
+    """The JVM RDD holding a localCheckpoint frame's blocks."""
+    return df._jdf.queryExecution().logical().rdd()
+
+
+def test_cache_scope_releases_persists_and_checkpoints_on_failure(spark):
+    """The per-epoch lifetime rule without a stream: a scope frees its
+    persisted frames AND its localCheckpoints at exit, even when the
+    block raises, leaving no RDD pinned. Also pins the Spark fact the
+    checkpoint release depends on: ``df.unpersist()`` alone leaves a
+    localCheckpoint's RDD pinned, so a release that only unpersists the
+    frame would leak one RDD per checkpoint."""
+    before = _pinned(spark)
+    probe = spark.range(8).localCheckpoint()
+    probe.unpersist(True)
+    assert _pinned(spark) - before == {_checkpoint_rdd(probe).id()}
+    _checkpoint_rdd(probe).unpersist(True)
+    assert _pinned(spark) - before == set()
+
+    with pytest.raises(RuntimeError, match="epoch failed"):
+        with cache.cache_scope("stream:test_lifetime"):
+            persisted = cache.scoped_persist(spark.range(16))
+            persisted.count()
+            cut = cache.scoped_checkpoint(spark.range(17))
+            assert cut.count() == 17
+            assert len(_pinned(spark) - before) == 2
+            raise RuntimeError("epoch failed")
+    assert _pinned(spark) - before == set()
+    assert not persisted.storageLevel.useMemory
+    assert not cut.storageLevel.useMemory
+    assert not _checkpoint_rdd(cut).getStorageLevel().useMemory()
+
+
+def test_overlap_writes_run_under_callers_scope(spark):
+    """Pool threads of ``_overlap_writes`` inherit the calling epoch's
+    scope: a frame a write thunk persists or checkpoints is released
+    when that scope exits, not leaked into a ``thread:<id>`` scope."""
+    from gmall_flink_0526_spark.streaming.pipelines import _overlap_writes
+
+    before = _pinned(spark)
+    got = {}
+
+    def persist_write():
+        got["scope"] = cache._current_scope()
+        got["p"] = cache.scoped_persist(spark.range(18))
+
+    with cache.cache_scope("stream:test_overlap"):
+        _overlap_writes(
+            persist_write,
+            lambda: got.update(c=cache.scoped_checkpoint(spark.range(19))),
+        )
+        assert got["scope"] == "stream:test_overlap"
+        assert got["p"].storageLevel.useMemory
+    assert not got["p"].storageLevel.useMemory
+    assert not _checkpoint_rdd(got["c"]).getStorageLevel().useMemory()
+    assert _pinned(spark) - before == set()
+
+
+def test_concurrent_registration_into_one_scope_loses_nothing():
+    """Many threads bound to one scope (more than the host's cores, fast
+    thread switching) register at once; the scope's release must reach
+    every frame. Fake frames: the registry only calls persist/unpersist."""
+    import sys
+    import threading
+
+    class Frame:
+        released = 0
+
+        def persist(self):
+            pass
+
+        def unpersist(self, blocking):
+            Frame.released += 1
+
+    n_threads, per_thread = 32, 200
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with cache.cache_scope("stream:test_concurrent_register"):
+
+            def work():
+                for _ in range(per_thread):
+                    cache.scoped_persist(Frame())
+
+            threads = [
+                threading.Thread(target=cache.in_current_scope(work))
+                for _ in range(n_threads)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(prev)
+    assert Frame.released == n_threads * per_thread
+    assert "stream:test_concurrent_register" not in cache._SCOPES

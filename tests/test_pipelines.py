@@ -1253,6 +1253,46 @@ def test_incremental_apps_bound_checkpoint_retention(spark, reg, tmp_path):
     assert spark.read.parquet(reg.channels["dwd_documents_unique"].path).count() > 0
 
 
+def test_concurrent_incremental_apps_release_every_epoch(spark, reg, tmp_path):
+    """Stress form of the retention bound: the MinHash and substring
+    incremental apps run CONCURRENTLY on one session over 5 epochs
+    each, both checkpointing and persisting per epoch. Every epoch's
+    frames belong to that epoch's cache scope, so once both streams
+    stop not one RDD they pinned is left — the final epoch's
+    checkpoints included, and regardless of when Python GC runs."""
+    docs = load_tables(spark, SF_SMOKE, "documents")["documents"].select(
+        "doc_id", "text"
+    )
+    n_epochs = 5
+    reg.register("ods_documents", schema="doc_id long, text string")
+    write_replay(
+        docs, reg.channels["ods_documents"].path, n_files=n_epochs, order_by=["doc_id"],
+        file_of=F.col("doc_id") % n_epochs,
+    )
+    reg.register("dwd_documents_unique")
+    reg.register("dwd_documents_cut")
+    ckpt = str(tmp_path / "ckpt")
+    pinned_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    queries = [
+        pipelines.doc_incremental_dedup_app(spark, reg, ckpt, str(tmp_path / "sig")),
+        pipelines.substring_dedup_app(spark, reg, ckpt, str(tmp_path / "win")),
+    ]
+    try:
+        for q in queries:
+            q.processAllAvailable()
+        data_epochs = [
+            sum(1 for p in q.recentProgress if p["numInputRows"] > 0) for q in queries
+        ]
+    finally:
+        for q in queries:
+            q.stop()
+    pinned_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    assert data_epochs == [n_epochs, n_epochs]
+    assert pinned_after - pinned_before == set()
+    for ch in ("dwd_documents_unique", "dwd_documents_cut"):
+        assert spark.read.parquet(reg.channels[ch].path).count() > 0
+
+
 def test_asof_join_matches_python_model(spark):
     """asof_join vs a plain-Python backward-inclusive model on a fixture
     with every edge the contract names: equal-ts match (inclusive), a

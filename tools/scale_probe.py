@@ -382,8 +382,10 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     n_epochs — the boilerplate block's contiguous ids split across
     every epoch, the adversarial fixture shape), then run one
     compaction cycle. Returns per-epoch trigger wall-times (from the
-    engine's own progress events), per-epoch store growth, and the
-    compaction time + resulting generation count."""
+    engine's own progress events), per-epoch store growth, the RDDs
+    the stream left pinned (0: each epoch's cache scope releases its
+    persists and checkpoints), and the compaction time + resulting
+    generation count."""
     from pyspark.sql import functions as F
 
     from gmall_flink_0526_spark.session import load_tables
@@ -408,6 +410,7 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
         reg.register("dwd_documents_unique")
         store = os.path.join(root, "store")
         prev = spark.conf.get("spark.sql.shuffle.partitions")
+        stream_before = int(spark.sparkContext._jsc.getPersistentRDDs().size())
         t0 = time.time()
         try:
             # same state-partition trade as the certified replay query
@@ -429,6 +432,9 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         total_s = round(time.time() - t0, 2)
+        pinned_by_stream = (
+            int(spark.sparkContext._jsc.getPersistentRDDs().size()) - stream_before
+        )
         bands = spark.read.parquet(os.path.join(store, "sig_bands"))
         growth = {
             int(r["epoch"]): int(r["ct"])
@@ -464,6 +470,7 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
             "total_sec": total_s,
             "kept_docs": int(kept),
             "store_rows_per_epoch": growth,
+            "rdds_pinned_by_stream": pinned_by_stream,
             "compact_sec": compact_s,
             "store_bytes_before_compaction": bytes_before,
             "store_bytes_after_compaction": _store_bytes(),
